@@ -6,7 +6,8 @@ The production input is an Iceberg table of image+caption pairs
    caption string, phash long)
 plus per-row lon/lat carried for the spatial operators. Here the table
 is synthesized deterministically (seed=42) and cached as parquet under
-``/root/repo/.fixtures_cache`` — regenerating any row is a pure
+``.fixtures_cache`` beside the package directory (overridden by
+``SPARK_GRAFT_FIXTURE_CACHE``) — regenerating any row is a pure
 function of (seed, row index), the same property a 10^12-row synthetic
 benchmark generator needs to create rows in parallel on executors.
 
@@ -36,8 +37,10 @@ __all__ = ["images_pdf", "polygons_records", "polygons_pdf",
            "ensure_near_dup_audios_parquet",
            "bench_polygons_pdf", "FIXTURE_CACHE"]
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURE_CACHE = os.environ.get(
-    "SPARK_GRAFT_FIXTURE_CACHE", "/root/repo/.fixtures_cache")
+    "SPARK_GRAFT_FIXTURE_CACHE",
+    os.path.join(os.path.dirname(_PACKAGE_ROOT), ".fixtures_cache"))
 
 _ADJ = ["misty", "amber", "quiet", "vivid", "rough", "pale", "bright"]
 _NOUN = ["harbor", "mesa", "delta", "grove", "ridge", "basin",

@@ -7,12 +7,10 @@ checkpoint-resume.
 Run: scripts/submit.sh  (packages esri_dump_spark.zip via --py-files)
 Args: [images_parquet] [output_dir] [run_id] [polygons_parquet]
 
-With a 4th arg the polygon dimension is a parquet table
-(poly_id, rings_json[, name]) and the join runs through
-``point_in_polygon_join_dist`` — the cover cells are computed
-EXECUTOR-side (mapInPandas), the posture for polygon tables beyond
-driver scale; without it the small fixture dimension is built
-driver-side as before.
+With a 4th arg the polygons come from a parquet table
+(poly_id, rings_json[, name]); without it, from the small fixture
+polygon set. Either way ``point_in_polygon_join`` builds the cover
+dimension on the driver and broadcasts it.
 
 Resume model (Iceberg-manifest-like): the work unit is the input file
 (files stay unsplit below spark.sql.files.maxPartitionBytes, so a
@@ -35,8 +33,7 @@ import pyspark.sql.functions as F
 
 def run(spark: SparkSession, images_path: str, out_dir: str,
         run_id: str = "default", polygons_path: str | None = None) -> dict:
-    from esri_dump_spark.operators.spatial_join import (
-        point_in_polygon_join, point_in_polygon_join_dist)
+    from esri_dump_spark.operators.spatial_join import point_in_polygon_join
     from esri_dump_spark.operators.tiles import assign_tiles
     from esri_dump_spark.operators.lineage import run_resumable
     from esri_dump_spark.sources.fixtures import polygons_pdf
@@ -46,13 +43,9 @@ def run(spark: SparkSession, images_path: str, out_dir: str,
             .withColumn("work_key", F.input_file_name()))
 
     def transform(pending):
-        if polygons_path is not None:
-            polys = spark.read.parquet(polygons_path)
-            joined = point_in_polygon_join_dist(pending, polys, res=11,
-                                                id_col="image_id")
-        else:
-            joined = point_in_polygon_join(pending, polygons_pdf(),
-                                           res=11)
+        polys = (polygons_pdf() if polygons_path is None
+                 else spark.read.parquet(polygons_path))
+        joined = point_in_polygon_join(pending, polys, res=11)
         return assign_tiles(joined, z=13).groupBy(
             "poly_id", "tile_id").agg(F.count(F.lit(1)).alias("n"))
 

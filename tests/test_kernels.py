@@ -18,8 +18,6 @@ from esri_dump_spark.kernels.rings import (
 from esri_dump_spark.kernels.rewind import rewind, ring_signed_sum
 from esri_dump_spark.plans.schema import find_oid_field, field_to_schema
 
-REFERENCE = "/root/reference"
-
 
 # ---------------------------------------------------------------- bbox (G9)
 

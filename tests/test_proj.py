@@ -22,6 +22,10 @@ from esri_dump_spark.plans.tilejson import (bounds_from_extent,
 
 TOL = 1e-6  # the reference's own approx() tolerance
 
+# ESRI WKT for wkids 103191 and 2000, rebuilt from the stored parameters
+WKT_FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures",
+                           "wkid_wkt.json")
+
 
 def test_lcc_golden_wkid_103191_fallback_from_unsupported_latest():
     """Reference test/tilejson.test.ts:98-122: latestWkid 6609 has no
@@ -53,7 +57,7 @@ def test_tmerc_golden_wkid_102605_imageserver_fixture():
 def test_wkt_passthrough_beats_wkid():
     """projectionDefinition order: explicit spatialReference.wkt wins
     over wkid (lib/tilejson.ts:86)."""
-    wkt = json.load(open("/root/reference/lib/wkid.json"))["103191"]
+    wkt = json.load(open(WKT_FIXTURE))["103191"]
     ext = {"xmin": 2231735.049, "ymin": 309043.987,
            "xmax": 2360165.299, "ymax": 439980.237,
            "spatialReference": {"wkid": 999999999, "wkt": wkt}}
@@ -404,7 +408,7 @@ def test_krovak_axis_conventions():
 
 
 def test_wkt_parser_nested_structure():
-    wkt = json.load(open("/root/reference/lib/wkid.json"))["2000"]
+    wkt = json.load(open(WKT_FIXTURE))["2000"]
     crs = P.crs_from_wkt(wkt)
     assert crs["projection"] == "Transverse_Mercator"
     assert crs["a"] == 6378249.145

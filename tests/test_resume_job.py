@@ -63,9 +63,10 @@ def test_job_resumes_from_file_lineage(spark, tmp_path):
 
 
 def test_job_dist_polygon_dim_matches_driver_dim(spark, tmp_path):
-    """The spark-submit job with a parquet polygon table (executor-
-    built cover via point_in_polygon_join_dist) must produce the same
-    summed rollup as the driver-dim path, and resume identically."""
+    """The spark-submit job with a parquet polygon table (read as a
+    Spark DataFrame and collected by point_in_polygon_join) must
+    produce the same summed rollup as the in-memory fixture polygons,
+    and resume identically."""
     from esri_dump_spark.sources.fixtures import polygons_pdf
 
     inp = str(tmp_path / "points")

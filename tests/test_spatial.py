@@ -12,7 +12,7 @@ import pytest
 from esri_dump_spark.kernels import cells as C
 from esri_dump_spark.kernels.rings import points_in_polygon, close_ring
 from esri_dump_spark.operators.spatial_join import (
-    attach_cell, polygon_cell_index, point_in_polygon_join)
+    attach_cell, point_in_polygon_join)
 from esri_dump_spark.operators.knn import (
     knn_join, knn_join_exact, radius_join, radius_join_exact,
     radius_res, safe_radius)
@@ -50,35 +50,6 @@ def test_attach_cell_matches_kernel(spark, points_pdf):
         assert got[iid] == int(e)
 
 
-def test_pip_join_matches_brute_force(spark, points_pdf):
-    polys = polygons_pdf()
-    got = {(r.image_id, r.poly_id)
-           for r in point_in_polygon_join(
-               spark.createDataFrame(points_pdf), polys, res=10).collect()}
-    exp = _brute_force_pip(points_pdf, polys)
-    assert got == exp
-    assert len(got) > 500  # non-trivial coverage
-
-
-def test_pip_join_semi_anti_partition(spark, points_pdf):
-    polys = polygons_pdf()
-    pts = spark.createDataFrame(points_pdf)
-    inside = point_in_polygon_join(pts, polys, res=10, how="left_semi")
-    outside = point_in_polygon_join(pts, polys, res=10, how="left_anti")
-    n_in, n_out = inside.count(), outside.count()
-    assert n_in + n_out == len(points_pdf)
-    exp_ids = {iid for iid, _ in _brute_force_pip(points_pdf, polys)}
-    assert n_in == len(exp_ids)
-
-
-def test_pip_join_uses_broadcast(spark, points_pdf):
-    polys = polygons_pdf()
-    plan = point_in_polygon_join(
-        spark.createDataFrame(points_pdf), polys, res=10)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan[:2000]
-
-
 def _grid_polygons_pdf(n: int) -> pd.DataFrame:
     """n small squares tiling a lon/lat grid, deterministic."""
     rows = []
@@ -96,27 +67,86 @@ def _grid_polygons_pdf(n: int) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
+# (polygon set, cover resolution, minimum brute-force hits): the
+# designed fixture polygons, and 10k grid squares for a polygon table
+# well past a handful
+_POLYGON_SETS = [(polygons_pdf, 10, 500),
+                 (lambda: _grid_polygons_pdf(10_000), 8, 100)]
+
+
+def _polygon_inputs(spark, polys: pd.DataFrame) -> dict:
+    """The same polygon set in both forms point_in_polygon_join takes:
+    a pandas frame and a (partitioned) Spark DataFrame."""
+    return {"pandas": polys,
+            "spark": spark.createDataFrame(polys).repartition(8)}
+
+
+def test_pip_join_matches_brute_force(spark, points_pdf):
+    pts = spark.createDataFrame(points_pdf)
+    for make, res, min_hits in _POLYGON_SETS:
+        polys = make()
+        exp = _brute_force_pip(points_pdf, polys)
+        assert len(exp) > min_hits  # non-trivial coverage
+        for kind, inp in _polygon_inputs(spark, polys).items():
+            got = {(r.image_id, r.poly_id) for r in
+                   point_in_polygon_join(pts, inp, res=res).collect()}
+            assert got == exp, (kind, res)
+
+
 def test_pip_join_dist_matches_driver_path(spark, points_pdf):
-    """The distributed polygon-dimension build (cover computed
-    executor-side via mapInPandas over >= 10k polygons) must produce
-    exactly the driver-path result."""
-    from esri_dump_spark.operators.spatial_join import (
-        point_in_polygon_join_dist)
+    """A partitioned Spark DataFrame of >= 10k polygons (cover built
+    executor-side) must give exactly the result of the same polygons
+    passed as a pandas frame (cover built on the driver)."""
     polys = _grid_polygons_pdf(10_000)
     pts = spark.createDataFrame(points_pdf)
-    pdf_polys = spark.createDataFrame(polys).repartition(8)
-    got = {(r.image_id, r.poly_id)
-           for r in point_in_polygon_join_dist(pts, pdf_polys,
-                                               res=8).collect()}
-    exp = {(r.image_id, r.poly_id)
-           for r in point_in_polygon_join(pts, polys, res=8).collect()}
+    inputs = _polygon_inputs(spark, polys)
+    got = {(r.image_id, r.poly_id) for r in point_in_polygon_join(
+        pts, inputs["spark"], res=8).collect()}
+    exp = {(r.image_id, r.poly_id) for r in point_in_polygon_join(
+        pts, inputs["pandas"], res=8).collect()}
     assert got == exp and len(got) > 100
-    # semi/anti partition holds on the dist path too
-    n_in = point_in_polygon_join_dist(pts, pdf_polys, res=8,
-                                      how="left_semi").count()
-    n_out = point_in_polygon_join_dist(pts, pdf_polys, res=8,
-                                       how="left_anti").count()
+    n_in = point_in_polygon_join(pts, inputs["spark"], res=8,
+                                 how="left_semi").count()
+    n_out = point_in_polygon_join(pts, inputs["spark"], res=8,
+                                  how="left_anti").count()
     assert n_in + n_out == len(points_pdf)
+
+
+def test_pip_join_semi_anti_partition(spark, points_pdf):
+    pts = spark.createDataFrame(points_pdf)
+    for make, res, _ in _POLYGON_SETS:
+        polys = make()
+        exp_ids = {iid for iid, _ in _brute_force_pip(points_pdf, polys)}
+        for kind, inp in _polygon_inputs(spark, polys).items():
+            n_in = point_in_polygon_join(pts, inp, res=res,
+                                         how="left_semi").count()
+            n_out = point_in_polygon_join(pts, inp, res=res,
+                                          how="left_anti").count()
+            assert n_in + n_out == len(points_pdf), (kind, res)
+            assert n_in == len(exp_ids), (kind, res)
+
+
+def test_pip_join_empty_polygon_set(spark, points_pdf):
+    """Zero polygons, in either input form: left_anti keeps every point,
+    inner and left_semi return nothing (the cover table has no rows to
+    infer a schema from)."""
+    cols = "poly_id long, rings_json string, name string"
+    empty = spark.createDataFrame([], cols)
+    pts = spark.createDataFrame(points_pdf)
+    for kind, polys in {"pandas": empty.toPandas(), "spark": empty}.items():
+        anti = point_in_polygon_join(pts, polys, how="left_anti")
+        assert anti.count() == len(points_pdf), kind
+        for how in ("inner", "left_semi"):
+            assert point_in_polygon_join(
+                pts, polys, how=how).count() == 0, (kind, how)
+
+
+def test_pip_join_uses_broadcast(spark, points_pdf):
+    pts = spark.createDataFrame(points_pdf)
+    for kind, inp in _polygon_inputs(spark, polygons_pdf()).items():
+        plan = point_in_polygon_join(pts, inp, res=10)._jdf \
+            .queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan, (kind, plan[:2000])
 
 
 def test_polygon_intersects_join_matches_kernel_brute_force(spark):
@@ -202,28 +232,6 @@ def test_polygon_intersects_join_plan_is_equi_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan[:3000]
     assert "MapInPandas" in plan, plan[:3000]
     assert "ArrowEvalPython" in plan, plan[:3000]
-
-
-def test_pip_join_dist_cover_built_executor_side(spark, points_pdf):
-    """Plan shape: the cover dimension comes from a MapInPandas
-    (executor-side kernel) feeding the coarse join — NOT a driver
-    materialization (no LocalTableScan/Scan ExistingRDD on the cover
-    side), and the forced-shuffle path shows no broadcast of it."""
-    from esri_dump_spark.operators.spatial_join import (
-        point_in_polygon_join_dist)
-    pts = spark.createDataFrame(points_pdf)
-    pdf_polys = spark.createDataFrame(_grid_polygons_pdf(10_000))
-    plan = point_in_polygon_join_dist(
-        pts, pdf_polys, res=8, broadcast_cover=False)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan, plan[:3000]
-    assert "BroadcastHashJoin" not in plan, plan[:3000]
-    assert "Scan ExistingRDD" not in plan, plan[:3000]
-    # broadcast variant: still executor-built, exchanged via broadcast
-    plan_b = point_in_polygon_join_dist(
-        pts, pdf_polys, res=8, broadcast_cover=True)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan_b and "BroadcastHashJoin" in plan_b
 
 
 def test_knn_matches_exact_oracle(spark):
@@ -554,26 +562,23 @@ def test_salted_ops_randomized_equivalence(spark):
     big.unpersist(); small.unpersist()
 
 
-def test_pip_join_dist_points_with_name_column(spark, points_pdf):
+def test_pip_join_points_with_name_column(spark, points_pdf):
     """A points table that itself has a `name` column must not become
-    ambiguous with the polygon dimension's kept name (renamed to
-    poly_name BEFORE the join)."""
-    from esri_dump_spark.operators.spatial_join import (
-        point_in_polygon_join_dist)
+    ambiguous with the polygon dimension's name (attached as
+    poly_name), whichever form the polygons come in."""
     polys = polygons_pdf()
     pts_named = spark.createDataFrame(
         points_pdf.assign(name=points_pdf["image_id"]))
-    pdf_polys = spark.createDataFrame(polys)
-    inner = point_in_polygon_join_dist(pts_named, pdf_polys, res=9)
-    assert inner.columns.count("poly_name") == 1
-    assert inner.columns.count("name") == 1  # the points' own column
-    semi = point_in_polygon_join_dist(pts_named, pdf_polys, res=9,
-                                      how="left_semi", id_col="image_id")
-    assert set(semi.columns) == set(pts_named.columns)
-    exp = {(r.image_id, r.poly_id) for r in point_in_polygon_join(
-        spark.createDataFrame(points_pdf), polys, res=9).collect()}
-    got = {(r.image_id, r.poly_id) for r in inner.collect()}
-    assert got == exp
+    exp = _brute_force_pip(points_pdf, polys)
+    for kind, inp in _polygon_inputs(spark, polys).items():
+        inner = point_in_polygon_join(pts_named, inp, res=9)
+        assert inner.columns.count("poly_name") == 1, kind
+        assert inner.columns.count("name") == 1, kind  # the points' own
+        semi = point_in_polygon_join(pts_named, inp, res=9,
+                                     how="left_semi", id_col="image_id")
+        assert set(semi.columns) == set(pts_named.columns), kind
+        got = {(r.image_id, r.poly_id) for r in inner.collect()}
+        assert got == exp, kind
 
 
 def test_two_phase_agg_allows_distinct_prefixed_column(spark):
