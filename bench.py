@@ -2,7 +2,8 @@
 """Benchmark harness.
 
 Default run (what the driver does):
-  * headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
+  * headline queries (the ``bench`` rows of ``__spark_entry__.REGISTRY``,
+    in table order) at $SPARK_GRAFT_SF_DIR (default ``SF_DIR``, sf0.1)
     on local[$SPARK_GRAFT_CPUS]
   * the north-star spatial-join + tile-assignment job at full
     parallelism (absolute rows/sec)
@@ -89,67 +90,6 @@ def _spatial_tile_job(spark, points_path: str, polys, dim) -> int:
 def run_headline(spark) -> dict[str, float]:
     import __spark_entry__ as E
 
-    names = [
-        "agg_pricing", "join_broadcast", "shipping_priority",
-        "supplier_volume", "topk_window", "dedup_first_event",
-        "cell_assign", "tile_assign", "pip_rect", "pip_diamond", "pip_hole",
-        "knn_geo", "token_count", "quality_score", "lang_id", "exact_dedup",
-        "ann_cosine", "events_hourly", "minhash_pairs_hashkey",
-        # capped = the scale path (bounded O(max_df^2)/gram candidates);
-        # the uncapped exact variant stays an oracle-only verify query
-        "ngram_jaccard_capped",
-        "sessionize_window", "salted_agg", "salted_join",
-        "image_decode_stats", "extract_synthetic",
-        # added in round 3 (new operators — not in r01/r02 suite totals)
-        "tile_pyramid", "poly_intersect_join",
-        "radius_geo", "phash_cluster_dedup", "asof_events",
-        "interval_attrib", "split_assign", "stratified_sample",
-        "mix_sources", "token_budget", "decontaminate",
-        "leakage_safe_split", "repetition", "redact_pii", "chunk_text",
-        "image_quality", "top_quality", "govern_corpus",
-        # added in round 4 (video/audio operators — not in earlier
-        # suite totals)
-        "frame_sample", "video_near_dup", "audio_stats", "audio_near_dup",
-        # added in round 5 (cluster collapse + line dedup — not in
-        # earlier suite totals)
-        # (emb_cluster_dedup stays out like emb_near_dup: the exact
-        # quadratic cosine oracle path isn't a throughput query; the
-        # LSH scale path's timing signal is emb-family adjacent via
-        # minhash/phash suite entries)
-        "video_cluster_dedup", "audio_cluster_dedup", "line_dedup",
-        # retrieval family (round 5): lexical BM25 + sparse/dense RRF
-        "bm25_topk", "hybrid_retrieval",
-        # sampling additions (round 5): E-S weighted draw + packing
-        "weighted_sample", "pack_sequences",
-        # int8 embedding path (round 5): quantize + quantized cosine
-        "quantize_embeddings", "quant_ann",
-        # corpus bigram-LM scoring (round 5): CCNet-style typicality
-        "lm_typicality",
-        # BPE vocabulary induction + encode (round 5): the corpus is
-        # scanned once, merge rounds are vocab-sized, encode joins a
-        # vocab-sized Python-encoded word table back to the corpus
-        "bpe_stats",
-        # robust gate + temperature mixing + shard sink plan +
-        # data-card profile (round 5)
-        "mad_outliers", "temperature_mix", "shard_plan",
-        "dataset_profile", "normalize_text", "chunk_overlap",
-        "winnow_fps",
-        # mergeable sketches (round 5): HLL distinct registers +
-        # count-min heavy hitters + bloom-prefiltered decontamination
-        "hll_users", "cm_words", "bloom_decontaminate",
-        # histogram-sketch quantiles + exact integer moments +
-        # percentile clipping (round 5)
-        "hist_quants", "moment_stats", "winsorize_orders",
-        # corpus diversity + Zipf head (round 5)
-        "corpus_diversity", "zipf_topk",
-        # skew gauge + rank calibration (round 5)
-        "skew_report", "rank_normalize",
-        # gopher n-gram repetition + rule filter (round 5)
-        "dup_ngrams", "gopher_gate",
-        # incremental ledger dedup (round 5)
-        "dedup_incremental",
-    ]
-    qs = E.queries()
     # warm the session so JVM/codegen/python-worker startup is not
     # attributed to the first query; the mapInPandas pass actually
     # launches the Arrow python workers (a pure-JVM count would not)
@@ -157,12 +97,11 @@ def run_headline(spark) -> dict[str, float]:
     warm.count()
     warm.mapInPandas(lambda it: it, schema=warm.schema).count()
     times: dict[str, float] = {}
-    for name in names:
+    for q in (q for q in E.REGISTRY if q.bench):
         t0 = time.time()
-        df = qs[name](spark, SF_DIR)
-        n = df.count()
-        times[name] = round(time.time() - t0, 3)
-        print(f"  {name}: {times[name]}s ({n} rows)", file=sys.stderr)
+        n = q.builder(spark, SF_DIR).count()
+        times[q.name] = round(time.time() - t0, 3)
+        print(f"  {q.name}: {times[q.name]}s ({n} rows)", file=sys.stderr)
     return times
 
 

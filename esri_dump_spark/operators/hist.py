@@ -301,10 +301,12 @@ def winsorize(df: DataFrame, value_col: str, lo: float, hi: float,
     both engines, so even rows ON the boundary clip identically.
 
     Scale: the sketch pass is the one corpus aggregate; the bounds
-    table is one row per group and AQE broadcasts it back, so the
-    data rows themselves NEVER shuffle (the mad_outliers shape) —
-    and the same null-safe key join keeps NULL groups clipped
-    against their own band."""
+    table is one row per group, LEFT-joined back on the null-safe
+    key — NULL groups clip against their own band, and a group with
+    no finite value has no band, so its rows pass through unclipped.
+    AQE turns that join into a broadcast of the bounds once their
+    size is known (the mad_outliers shape), so the data rows cross
+    at most one exchange."""
     _check_grid(lo, hi, bins)
     for p in (p_lo, p_hi):
         if not (isinstance(p, int) and 1 <= p <= 1000):
@@ -329,7 +331,7 @@ def winsorize(df: DataFrame, value_col: str, lo: float, hi: float,
         for g in groups:
             c = _qcol(g).eqNullSafe(_qcol(f"_wz_{g}"))
             cond = c if cond is None else cond & c
-        joined = df.join(bounds, cond).drop(
+        joined = df.join(bounds, cond, "left").drop(
             *[f"_wz_{g}" for g in groups])
     else:
         joined = df.crossJoin(bounds)
@@ -391,9 +393,10 @@ def winsorize_orders_oracle_sql(lo: float, hi: float, bins: int,
           FROM n, UNNEST([{int(p_lo)}, {int(p_hi)}]) AS u(p)),
         q AS (
           SELECT t.o_orderpriority, t.permille, {qest} AS q_est
-          FROM t JOIN c ON c.o_orderpriority = t.o_orderpriority
-                       AND c.cum >= t.target
-                       AND (c.cum - c.cnt) < t.target),
+          FROM t JOIN c
+            ON c.o_orderpriority IS NOT DISTINCT FROM t.o_orderpriority
+           AND c.cum >= t.target
+           AND (c.cum - c.cnt) < t.target),
         b AS (
           SELECT o_orderpriority,
                  max(CASE WHEN permille = {int(p_lo)}
@@ -407,6 +410,6 @@ def winsorize_orders_oracle_sql(lo: float, hi: float, bins: int,
                     WHEN isnan(CAST(o.o_totalprice AS DOUBLE)) THEN 0
                     WHEN {clip} = CAST(o.o_totalprice AS DOUBLE)
                          THEN 0 ELSE 1 END AS was_clipped
-        FROM orders o JOIN b
-             ON o.o_orderpriority = b.o_orderpriority
+        FROM orders o LEFT JOIN b
+             ON o.o_orderpriority IS NOT DISTINCT FROM b.o_orderpriority
         ORDER BY o.o_orderkey"""

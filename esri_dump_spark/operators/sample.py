@@ -474,8 +474,7 @@ def mad_outliers(df: DataFrame, value_col: str,
     are null-safe, so NULL-keyed rows are classified against their
     own median rather than silently dropped (a plain equi-join would
     lose them). A SQL twin over NULL-keyed data must join with
-    ``IS NOT DISTINCT FROM`` to match; the fixture twins join USING
-    because their key columns are never NULL.
+    ``IS NOT DISTINCT FROM`` to match, as the fixture twins do.
 
     Plan shape at scale: two keyed aggregations over ``by`` (median,
     then MAD of deviations) and two joins of per-group 1-row stats

@@ -170,12 +170,15 @@ def hll_register_table(df: DataFrame, value_col: str,
     _no_clash(set(groups), "_hv", "reg", "rho", "m_j")
     hv = hash_u60_spark_sql(_qident(value_col), seed)
     rho = hll_rho_sql("_hv", m, SPARK)
+    # the hash is LET-BOUND as the lambda variable _hv and the
+    # one-element array is unrolled by a Generate, which no optimizer
+    # rule sees through: reg, rho and any filter pushed onto them
+    # read the hash from ONE plan site (plan-pinned in test_sketch)
+    reg_rho = (f"transform(array({hv}), _hv -> named_struct("
+               f"'reg', _hv % {m}, 'rho', CAST({rho} AS INT)))")
     keyed = (df.where(_qcol(value_col).isNotNull())
                .selectExpr(*[_qident(g) for g in groups],
-                           f"{hv} AS _hv")
-               .selectExpr(*[_qident(g) for g in groups],
-                           f"_hv % {m} AS reg",
-                           f"CAST({rho} AS INT) AS rho"))
+                           f"inline_outer({reg_rho})"))
     return (keyed.groupBy(*[_qcol(g) for g in groups], F.col("reg"))
                  .agg(F.max("rho").alias("m_j")))
 

@@ -1,7 +1,11 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans of the flagship
-queries, so the scan pushdown / broadcast / Arrow boundaries are
-reviewable without running Spark. Run: python scripts/dump_plans.py"""
+"""Print the formatted physical plans of registered queries at sf0.001.
+
+Run: python scripts/dump_plans.py [name ...]   (default: every query in
+``__spark_entry__.REGISTRY`` order). Nothing is written to disk; the
+checked form of each plan is its ``plan`` fingerprint in the registry
+(tests/test_physical_plans.py).
+"""
 
 from __future__ import annotations
 
@@ -11,237 +15,24 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-QUERIES = [
-    ("where_pushdown", "P4 — filter + column pruning pushed to the scan"),
-    ("join_broadcast", "star join — every dimension broadcast"),
-    ("agg_pricing", "hash aggregate with map-side partials"),
-    ("pip_rect", "J2 — broadcast cell join + Arrow ray-cast refine"),
-    ("knn_geo", "J3 — grid-disk candidates + window top-k"),
-    ("radius_geo", "J7b — one-pass exact within-radius join: disk "
-     "explode + single cell equi-join + distance filter, no window"),
-    ("tile_assign", "J4 — JVM tile id + rollup (no Python)"),
-    ("tile_pyramid", "J4b — hierarchical rollup: leaf agg + shrinking "
-     "per-zoom folds, shared lineage collapses to ReusedExchange"),
-    ("poly_intersect_join", "J6 — executor-built covers, slim (cell, id) "
-     "candidate equi-join, per-pair geometry re-attach + even-odd refine"),
-    ("asof_events", "as-of join — union-tag + ONE keyed window sort, "
-     "no join node"),
-    ("interval_attrib", "interval join — bucketed (key, time-bucket) "
-     "equi-join, sequence/explode fan-out, exact boundary filter"),
-    ("split_assign", "deterministic split — map-only, zero exchange "
-     "before the rollup, hash + thresholds in codegen"),
-    ("decontaminate", "benchmark decontamination — eval gram set "
-     "collapses to a DISTINCT 60-bit hash table and broadcasts; only "
-     "(id, int64) reaches the join and hit rollup"),
-    ("mix_sources", "corpus mixing — count agg's 1-row M broadcast + "
-     "per-source row_number window, all-integer quotas"),
-    ("govern_corpus", "governance pipeline — quality + repetition "
-     "gates collapse into ONE scan-level filter BEFORE the gram "
-     "explode (Catalyst prunes ahead of all hash work); "
-     "decontamination anti-join on broadcast eval hashes; split CASE "
-     "map-only"),
-    ("salted_agg", "skew — two-phase salted aggregation"),
-    ("extract_synthetic", "EP1 — manifest -> mapInPandas decode -> dedup"),
-    ("frame_sample", "F9b — video frame sampling: one map-only "
-     "MapInPandas over the container bytes, zero exchanges before the "
-     "rollup; bytes never shuffle"),
-    ("video_near_dup", "video dedup — frame phashes from the map stage "
-     "feed an ids-only self-equi-join on the 64-bit hash; every "
-     "Exchange carries (video_id, phash) and counts only"),
-    ("audio_stats", "F9c — audio decode + signal stats: one map-only "
-     "MapInPandas over the PCM-WAV bytes (rms/zcr/centroid computed "
-     "columnar per batch); zero exchanges, bytes never shuffle"),
-    ("audio_near_dup", "audio dedup — per-window Haitsma-Kalker "
-     "fingerprints from the map stage feed the same ids-only "
-     "shared_hash_pairs engine as video; every Exchange carries "
-     "(audio_id, fp) and counts only, max_df caps degenerate "
-     "fingerprints before the self-join"),
-    ("line_dedup", "cross-doc boilerplate line scrub — the explode "
-     "and 60-bit line-key derivation are map-side; the frequency agg "
-     "exchanges (int64, doc_id) only; the rare above-threshold key "
-     "set feeds a BroadcastHashJoin marker; ONE doc-keyed aggregate "
-     "(struct sort + filter + join, all JVM higher-order functions) "
-     "rebuilds the text — no Python anywhere"),
-    ("video_cluster_dedup", "F9d — cluster collapse over the near-dup "
-     "pair graph: min-id-per-component labels (iterative fixpoint runs "
-     "at build time off localCheckpoints) reduce to a loser-id set that "
-     "BROADCASTS to a left_anti join against the payload table, so "
-     "video bytes never enter an exchange; audio_cluster_dedup shares "
-     "this exact shape via cluster_dedup_from_pairs"),
-    ("emb_cluster_dedup", "embedding cluster collapse — per-row "
-     "double-cast + norm hoisted out of the pair stage (one fold per "
-     "pair), min-id component labels (pointer-jumped fixpoint at build "
-     "time) reduce to a loser-id set broadcast into a left_anti join; "
-     "embedding arrays never shuffle"),
-    ("bm25_topk", "lexical retrieval — ONE tokenization fold per "
-     "document (persisted as fixed-width (id, dl, tf...) — text never "
-     "survives the scan), corpus stats as a single-row aggregate "
-     "broadcast back via BroadcastNestedLoopJoin, scoring map-only in "
-     "codegen, top-k via TakeOrderedAndProject (per-partition heaps, "
-     "never a global sort); the rank window runs on k rows"),
-    ("hybrid_retrieval", "sparse+dense fusion — BM25 and exact-cosine "
-     "channels each end k-bounded, so the full-outer RRF fold joins "
-     "tiny lists (AQE-broadcast); the fused score is a fixed-order "
-     "sum of CAST(1 AS DOUBLE)/(c+rank) weights — integer-rank-only, "
-     "no corpus-sized work after the two channel top-ks"),
-    ("weighted_sample", "importance-weighted draw — the E-S key is "
-     "one map-side expression over the shared md5-u60 hash (ordering "
-     "on the 12-dp rounded key, ln-ulp-proof); selection is "
-     "TakeOrderedAndProject (per-partition n-row heaps; holds to "
-     "topKSortFallbackThreshold — raise it alongside n at scale); "
-     "zero wide exchanges"),
-    ("pack_sequences", "sequence packing — one keyed window running "
-     "sum over the deterministic (hash, id) order yields all-integer "
-     "(bin_id, bin_offset); a single exchange on the `by` shard key, "
-     "everything else codegen map work"),
-    ("quantize_embeddings", "int8 quantization — pure map (zero "
-     "exchanges): per-vector max-abs + floor-based int8 transform in "
-     "codegen; the stored column is 4x smaller than float32, so every "
-     "downstream scan/shuffle of embeddings pays a quarter of the "
-     "bytes"),
-    ("quant_ann", "quantized cosine top-k — the 1-row query "
-     "broadcasts, integer dot products fold map-side (exact: all "
-     "partial sums below 2^53), TakeOrderedAndProject; raw ordering "
-     "is bit-identical cross-engine (IEEE sqrt, no ln)"),
-    ("lm_typicality", "corpus bigram-LM scoring — tokenize + bigram "
-     "transform + md5-u60 gram keys all map-side (text dies at the "
-     "first projection; every exchange after the explode carries "
-     "fixed-width longs), per-doc gram pre-aggregation PERSISTED "
-     "(fixed-width InMemoryTableScan feeds both the corpus-count "
-     "aggregate and the scoring join — the tokenize+explode stage "
-     "runs once), AQE broadcasts the counts side when it fits, final "
-     "doc-keyed aggregate ends in ONE IEEE division — no Python "
-     "anywhere"),
-    ("bpe_stats", "BPE encode at corpus scale — the learned merge "
-     "list is applied to the DISTINCT word table in ONE vocab-sized "
-     "MapInPandas (the only Python node in the plan); the corpus "
-     "explode joins that small encoded table (AQE broadcast) and "
-     "rolls up per doc — training's merge rounds ran before this "
-     "plan exists, each vocab-sized with a 1-row driver argmax"),
-    ("mad_outliers", "robust outlier gate — two keyed HashAggregates "
-     "(median, then MAD of deviations) over (group, value) partials; "
-     "both per-group stat tables come back through broadcast joins, "
-     "so the data rows themselves never enter an exchange and the "
-     "k*MAD cut is a codegen map comparison — no Python, no rounding "
-     "(the dyadic-input construction makes it bit-exact)"),
-    ("temperature_mix", "temperature-scaled mixing — one count "
-     "aggregate yields the per-source weight table (sqrt-composed "
-     "codegen expression), M is a 1-row broadcast, and the data rows "
-     "pay exactly one exchange (the per-source row_number window); "
-     "quota filter is an integer comparison in codegen"),
-    ("normalize_text", "staged text normalization — six nested "
-     "regexp_replace stages plus their regexp_count audits, all in "
-     "ONE whole-stage-codegen projection over the scan: zero "
-     "shuffles, zero Python, column pruning intact"),
-    ("winnow_fps", "winnowing fingerprints — gram hashing, window "
-     "minima and tie-breaks are all per-document array expressions "
-     "(transform/slice/array_min) in one codegen projection; the "
-     "only exchange is the rollup's — the fingerprint explode "
-     "itself is map-side"),
-    ("hll_users", "HLL distinct sketch — hash/register/rank are one "
-     "codegen projection over the scan; the register HashAggregate "
-     "partial-combines map-side to <= m rows per group before its "
-     "single exchange, the estimate collapses the register table "
-     "(tiny) and the exact-count branch joins back AQE-broadcast; "
-     "no Python, the estimator is one fixed-order IEEE chain"),
-    ("cm_words", "count-min heavy hitters — the depth bucket array "
-     "and posexplode are map-side codegen, the cell aggregate "
-     "partial-combines to <= depth*width rows before its exchange, "
-     "and the probe join broadcasts the sketch; estimates stay "
-     "ALL-INTEGER in codegen"),
-    ("bloom_decontaminate", "bloom-prefiltered decontamination — the "
-     "eval side folds to <= m/32 bit-packed words (bit_or "
-     "partial-combines map-side), the membership test broadcasts "
-     "that table into the probe join, and the only corpus-scale "
-     "exchange is the per-doc rollup; no Python anywhere"),
-    ("hist_quants", "histogram-sketch quantiles — the bucket index "
-     "is one codegen projection over the scan and the count "
-     "aggregate partial-combines map-side to <= bins rows per group "
-     "before its single exchange; the cumulative window, target "
-     "ranks and interpolation all run over sketch-sized tables "
-     "(AQE broadcasts the target side); no Python"),
-    ("winsorize_orders", "percentile clipping — the sketch pass is "
-     "the one corpus aggregate; the per-group bounds table (1 row "
-     "per group) AQE-broadcasts back into the clamp join, so data "
-     "rows never shuffle; the clamp itself is codegen LEAST/GREATEST "
-     "over non-NaN doubles; no Python"),
-    ("moment_stats", "exact integer moments — ONE map-side-combined "
-     "aggregate carries three BIGINTs per group over the wire; "
-     "mean/variance/stddev are a final-projection IEEE chain, never "
-     "a distributed float sum; no Python"),
-    ("corpus_diversity", "type-token ratio — tokenize+explode is "
-     "codegen over the scan, the word-count aggregate "
-     "partial-combines map-side (each task ships its LOCAL vocab, "
-     "never raw tokens), and the diversity rollup runs over the "
-     "vocab-sized table; never an Expand-planned COUNT DISTINCT "
-     "over occurrences; no Python"),
-    ("zipf_topk", "Zipf head — the rank window runs over the "
-     "vocab-sized word-count table partitioned by group, with a "
-     "deterministic total order (freq DESC, word ASC); no Python"),
-    ("skew_report", "pre-join skew gauge — one map-side-combined "
-     "count aggregate over the scan; the global rank window and the "
-     "1-row total cross join run over the key-cardinality counts "
-     "table (the single-partition WindowExec warning is the design: "
-     "sketch-sized input), top-k rows only; no Python"),
-    ("rank_normalize", "percentile-rank calibration — rank and "
-     "group-count ride ONE window exchange on the group keys (no "
-     "second aggregate or join); pct_rank is a codegen division; "
-     "no Python"),
-    ("dup_ngrams", "gopher n-gram repetition — ZERO shuffle: "
-     "tokenize, gram-build, sort and ONE run-length aggregate fold "
-     "per document, all inside whole-stage codegen; the token array "
-     "is let-bound as a lambda variable (filter pushdown would "
-     "substitute a plain alias into the per-gram lambda — the r32 "
-     "quadratic class) and the site counts are plan-pinned; "
-     "no Python"),
-    ("gopher_gate", "gopher rule filter — ZERO shuffle: all seven "
-     "published thresholds are all-integer cross-multiplied codegen "
-     "comparisons over per-row array counts (words/lines/tokens "
-     "let-bound as lambda variables); no ratio is ever materialized, "
-     "no Python"),
-    ("dedup_incremental", "incremental ledger dedup — the prior "
-     "corpus is one fixed-width distinct-hash table (mergeable by "
-     "union+distinct, never re-read); the shard anti-joins it "
-     "(broadcast while it fits) and shuffles once on the content "
-     "hash for the min-id survivor window; no Python"),
-    ("dataset_profile", "data-card rollup — ONE aggregate over the "
-     "pruned column set: Expand replicates each (projected) row once "
-     "per DISTINCT column, partial/final HashAggregate pairs carry "
-     "the counts, the 1-row pivot to long format is trivial; no "
-     "Python, no join, column pruning reaches the scan"),
-    ("shard_plan", "training-shard sink manifest — split CASE and "
-     "hash-mod-shard are map-side codegen over the scan (the sink "
-     "itself adds one repartition on (split, shard) so each leaf "
-     "directory is written by exactly one task); the rollup is one "
-     "partial/final HashAggregate pair"),
-]
 
-
-def main() -> None:
+def main(names: list[str]) -> None:
     import __spark_entry__ as E
     from esri_dump_spark.session import get_spark
 
-    spark = get_spark(app_name="dump-plans", cores=4, shuffle_partitions=8)
     qs = E.queries()
-    out = ["# PLANS — physical plans of the flagship queries",
-           "",
-           "Regenerate with `python scripts/dump_plans.py` (sf0.001).",
-           "What to look for: `PushedFilters` / trimmed `ReadSchema` at "
-           "the scans, `BroadcastHashJoin` (never SortMergeJoin) for dim "
-           "joins, `ArrowEvalPython`/`MapInPandas` only where a kernel "
-           "genuinely needs Python, `HashAggregate` partial/final pairs.",
-           ""]
-    for name, blurb in QUERIES:
-        df = qs[name](spark, "/root/testdata/sf0.001")
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution
-            .ExplainMode.fromString("formatted"))
-        out += [f"## {name}", "", blurb, "", "```", plan.rstrip(), "```", ""]
-    spark.stop()
-    with open(f"{REPO}/PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print(f"wrote {REPO}/PLANS.md")
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {', '.join(unknown)}")
+    spark = get_spark(app_name="dump-plans", cores=4, shuffle_partitions=8)
+    try:
+        for name in names or qs:
+            df = qs[name](spark, E.SF_DEFAULT)
+            print(f"== {name} ==")
+            df.explain("formatted")
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

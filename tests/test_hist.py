@@ -223,6 +223,50 @@ def test_winsorize_validation_and_null_group(spark):
     assert out.count() == 3
 
 
+def test_winsorize_keeps_groups_without_finite_values(spark):
+    """A group whose values are all NULL or all NaN has no band; its
+    rows pass through unclipped (not dropped), and the DuckDB twin
+    agrees row for row, NULL group key included."""
+    import pyarrow as pa
+
+    from esri_dump_spark.operators.hist import (
+        winsorize, winsorize_orders_oracle_sql)
+    nan = float("nan")
+    rows = ([(k, "a", float(10 * k)) for k in range(1, 21)]
+            + [(21, "n", None), (22, "n", None),
+               (23, "x", nan), (24, "x", nan),
+               (25, None, 5.0), (26, None, 900.0), (27, None, 60.0)])
+    df = spark.createDataFrame(
+        rows, "o_orderkey long, o_orderpriority string, "
+              "o_totalprice double")
+    sp = (winsorize(df, "o_totalprice", LO, HI, BINS,
+                    ("o_orderpriority",), 100, 900)
+          .select("o_orderkey", "o_orderpriority", "o_totalprice",
+                  "clipped", "was_clipped")
+          .orderBy("o_orderkey").collect())
+    assert [r["o_orderkey"] for r in sp] == [r[0] for r in rows]
+    by_key = {r["o_orderkey"]: r for r in sp}
+    for k in (21, 22):
+        assert by_key[k]["clipped"] is None
+        assert by_key[k]["was_clipped"] is None
+    for k in (23, 24):
+        assert math.isnan(by_key[k]["clipped"])
+        assert by_key[k]["was_clipped"] == 0
+    con = duckdb.connect()
+    # arrow keeps NULL and NaN apart (a pandas float column would not)
+    orders = pa.table({c: [r[i] for r in rows] for i, c in enumerate(
+        ("o_orderkey", "o_orderpriority", "o_totalprice"))})
+    con.register("orders", orders)
+    du = con.execute(winsorize_orders_oracle_sql(
+        LO, HI, BINS, 100, 900)).fetchall()
+    assert len(du) == len(sp)
+    for a, b in zip(sp, du):
+        assert (a[0], a[1], a[4]) == (b[0], b[1], b[4])
+        for x, y in ((a[2], b[2]), (a[3], b[3])):
+            assert (x is None and y is None) or \
+                (math.isnan(x) and math.isnan(y)) or bits(x) == bits(y)
+
+
 # ------------------------------------------------------------ moments
 
 def test_moments_exact_vs_fraction(spark):

@@ -39,6 +39,24 @@ def _rows(cols, rows):
     return sorted(tuple(_norm(r[i]) for i in idx) for r in rows)
 
 
+def test_registry_invariants():
+    """Every q_* builder has exactly one REGISTRY row; every query has
+    a DuckDB twin or a rows-only rationale, never both; the bench
+    noise sentinels are bench queries."""
+    import inspect
+
+    import bench
+
+    rows = sorted(q.builder.__name__ for q in E.REGISTRY)
+    builders = sorted(n for n, f in vars(E).items() if n.startswith("q_")
+                      and inspect.isfunction(f) and f.__module__ == E.__name__)
+    assert rows == builders
+    rows_only = {q.name for q in E.REGISTRY if q.rows_only}
+    assert set(QUERIES) == set(ORACLES) | rows_only
+    assert not rows_only & set(ORACLES)
+    assert set(bench.SENTINELS) <= {q.name for q in E.REGISTRY if q.bench}
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity(spark, sf_dir, name):
     sdf = QUERIES[name](spark, sf_dir)

@@ -1,19 +1,62 @@
 """Physical-plan shape assertions — the scale contract, not just row
-correctness: filters reach the parquet scan, small dims broadcast,
-aggregates have map-side partials, JVM-only operators contain no
-Python eval node, and the refine UDF is Arrow-vectorized (never
-row-at-a-time BatchEvalPython).
+correctness: every registered query's plan matches its registry
+fingerprint, filters reach the parquet scan, small dims broadcast,
+aggregates have map-side partials, and the refine UDF is
+Arrow-vectorized (never row-at-a-time BatchEvalPython).
 """
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
 import __spark_entry__ as E
 
+# a plan-tree line: tree prefix, optional whole-stage-codegen marker,
+# then the node name
+_NODE = re.compile(r"^(?:[ :]*[+:]- )?(?:\*\(\d+\) )?(\w+)")
+
 
 def _physical(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _fingerprint(df) -> tuple[int, ...]:
+    """Count each E.PLAN_NODES kind by exact node name."""
+    lines = _physical(df).splitlines()
+    names = [m.group(1) for m in map(_NODE.match, lines) if m]
+    return tuple(names.count(kind) for kind in E.PLAN_NODES)
+
+
+@pytest.mark.parametrize("q", E.REGISTRY, ids=lambda q: q.name)
+def test_plan_fingerprint(spark, q):
+    """A plan change fails here; if it is deliberate, update the row's
+    ``plan`` in __spark_entry__.REGISTRY (inspect the plan with
+    scripts/dump_plans.py)."""
+    # a cache an earlier test materialized prints its executed plan,
+    # so fingerprint from a clean cache like a fresh session
+    spark.catalog.clearCache()
+    got = _fingerprint(q.builder(spark, E.SF_DEFAULT))
+    assert got == q.plan, (
+        f"{q.name}: live plan counts {got} != registry {q.plan} "
+        f"(order: {', '.join(E.PLAN_NODES)})")
+
+
+def test_fingerprint_detects_injected_plan_change(spark):
+    """The fingerprint sees a strategy change: with size-picked
+    broadcasts turned off, decontaminate's eval-hash join becomes a
+    sort-merge join."""
+    q = next(q for q in E.REGISTRY if q.name == "decontaminate")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        injected = _fingerprint(q.builder(spark, E.SF_DEFAULT))
+    finally:
+        spark.conf.set(key, old)
+    assert injected != q.plan
+    assert _fingerprint(q.builder(spark, E.SF_DEFAULT)) == q.plan
 
 
 def _full(df) -> str:
@@ -48,21 +91,6 @@ def test_agg_has_map_side_partial(spark, sf_dir):
     df = E.queries()["agg_pricing"](spark, sf_dir)
     plan = _physical(df)
     assert "partial_sum" in plan or "partial_" in plan
-
-
-def test_jvm_only_operators_have_no_python_node(spark, sf_dir):
-    for name in ("cell_assign", "tile_assign", "token_count",
-                 "quality_score", "lang_id", "fingerprint",
-                 "sessionize_window", "ngram_jaccard", "emb_near_dup",
-                 "embedding_norms", "salted_agg", "salted_join",
-                 "mix_sources", "token_budget", "decontaminate",
-                 "repetition", "redact_pii", "chunk_text",
-                 "top_quality", "line_dedup", "mad_outliers",
-                 "temperature_mix", "shard_plan", "dataset_profile",
-                 "normalize_text", "chunk_overlap"):
-        plan = _physical(E.queries()[name](spark, sf_dir))
-        assert "EvalPython" not in plan, f"{name} has a Python stage"
-        assert "MapInPandas" not in plan, f"{name} has a Python stage"
 
 
 def test_dataset_profile_plan_shape(spark, sf_dir):

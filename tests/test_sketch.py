@@ -397,3 +397,7 @@ def test_sketch_plans_stay_jvm(spark):
     # array into a size() filter (the winnow-quadratic bug class)
     assert _plan(cm).count("md5(") == 4          # depth hashes
     assert _plan(bloom).count("md5(") == 4       # k hashes
+    # the HLL hash feeds reg and rho (twice) from one site, also when
+    # a filter on reg is pushed below the projection
+    assert _plan(regs).count("md5(") == 1
+    assert _plan(regs.where("reg < 128")).count("md5(") == 1
