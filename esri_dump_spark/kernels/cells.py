@@ -1,86 +1,155 @@
-"""Deterministic 64-bit geo cell index (F10 in SURVEY.md §2.7).
+"""The one packed 64-bit grid behind geo cells (F10 in SURVEY.md §2.7)
+and slippy tiles (J4); no other module does grid arithmetic. (The
+``h3`` wheel is absent, so the engine ships its own scheme with the
+same API shape: encode / disk / boundary / polygon cover.)
 
-The ``h3`` wheel is not installed in this environment, so the engine
-ships its own cell scheme with the same API shape (encode / disk /
-boundary / polygon cover). The scheme is an equirectangular power-of-2
-grid:
+    level r in [0, 29], n = 2^r
+    x  = clamp(floor((lon + 180) / 360 * n), 0, n - 1)
+    y  = clamp(floor(yfrac(lat) * n), 0, n - 1)
+    id = (r << 58) | (x << 29) | y            (fits in a signed int64)
 
-    res r in [0, 29]
-    cx = clamp(floor((lon + 180) / 360 * 2^r), 0, 2^r - 1)
-    cy = clamp(floor((lat +  90) / 180 * 2^r), 0, 2^r - 1)
-    cell = (r << 58) | (cx << 29) | cy        (fits in a signed int64)
+Cells and tiles differ only in ``yfrac``, which a ``Projection``
+supplies in SQL and in NumPy:
 
-Chosen over Morton/H3 interleaving because it is (a) exactly
-expressible as a plain arithmetic SQL expression — so every cell-based
-operator has a DuckDB oracle — and (b) trivially NumPy-vectorizable.
-Equi-join keys don't need space-filling locality; range-locality
-consumers (IVF buckets) can sort on (cx, cy) directly.
+    EQUIRECT   (lat + 90) / 180                       cells (J2, J3)
+    MERCATOR   (1 - ln(tan φ + 1 / cos φ) / π) / 2    slippy tiles (J4)
+               φ = lat clamped to ±85.05112878, so y grows southward
 
-At 100 TB scale the cell id is the bucketing/partitioning key: tables
-are written bucketed by ``cell`` so the big spatial joins co-locate
-without a shuffle.
+Either way a grid square is a lon/lat rectangle, so one polygon cover
+serves both. The id is a plain arithmetic SQL expression (every cell
+and tile operator has a DuckDB oracle) and trivially NumPy-vectorized;
+equi-join keys need no space-filling locality. At 100 TB scale it is
+the bucketing key, so the big spatial joins co-locate without a
+shuffle.
 """
 
 from __future__ import annotations
 
+import math
+from typing import Callable, NamedTuple
+
 import numpy as np
 
-from .rings import rects_intersect_polygon
+from .rings import close_ring, rects_intersect_polygon
 
 __all__ = [
-    "MAX_RES", "latlng_to_cell", "cell_to_res_xy", "cell_bounds",
-    "cell_center", "grid_disk", "cover_bbox", "polygon_cover",
-    "cell_sql_expr",
+    "MAX_RES", "LEVEL_SHIFT", "X_SHIFT", "Projection", "EQUIRECT",
+    "MERCATOR", "grid_xy", "pack_xy", "clamp_sql", "grid_index_sql",
+    "pack_sql", "grid_sql_expr", "latlng_to_cell", "cell_sql_expr",
+    "cell_to_res_xy", "square_bounds", "cell_bounds", "cell_center",
+    "grid_disk", "cover_bbox", "polygon_cover",
 ]
 
 MAX_RES = 29
-_RES_SHIFT = 58
-_CX_SHIFT = 29
+LEVEL_SHIFT = 58
+X_SHIFT = 29
+_MERC_LAT = 85.05112878
+
+
+class Projection(NamedTuple):
+    """lat -> y fraction in SQL (``y_sql``) and NumPy (``y_np``), and
+    the NumPy inverse ``lat_np`` that bounds squares for covers."""
+    y_sql: Callable[[str], str]
+    y_np: Callable[[np.ndarray], np.ndarray]
+    lat_np: Callable[[np.ndarray], np.ndarray]
+
+
+def _merc_y_sql(lat: str) -> str:
+    # the Web-Mercator latitude clamp keeps LN/TAN finite at the poles
+    latc = f"LEAST(GREATEST(CAST({lat} AS DOUBLE), -{_MERC_LAT}), {_MERC_LAT})"
+    return (f"(1.0 - LN(TAN(RADIANS({latc})) + 1.0 / COS(RADIANS({latc}))) "
+            f"/ PI()) / 2.0")
+
+
+def _merc_y_np(lat):
+    rad = np.radians(np.clip(lat, -_MERC_LAT, _MERC_LAT))
+    return (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / math.pi) / 2.0
+
+
+EQUIRECT = Projection(lambda lat: f"({lat} + 90.0) / 180.0",
+                      lambda lat: (lat + 90.0) / 180.0,
+                      lambda f: f * 180.0 - 90.0)
+MERCATOR = Projection(_merc_y_sql, _merc_y_np,
+                      lambda f: np.degrees(np.arctan(np.sinh(
+                          math.pi * (1.0 - 2.0 * f)))))
+
+
+def grid_xy(lon, lat, level: int, projection: Projection = EQUIRECT):
+    """Integer (x, y) of the grid square holding each point, clamped at
+    the grid edge (vectorized) — the NumPy twin of ``grid_index_sql``."""
+    n = 1 << level
+    fx = (np.asarray(lon, dtype=np.float64) + 180.0) / 360.0
+    fy = projection.y_np(np.asarray(lat, dtype=np.float64))
+    return tuple(np.clip(np.floor(f * n), 0, n - 1).astype(np.int64)
+                 for f in (fx, fy))
+
+
+def pack_xy(level, x, y):
+    """Packed id of grid square (x, y) at ``level`` (vectorized)."""
+    return ((np.int64(level) << LEVEL_SHIFT)
+            | (np.asarray(x, np.int64) << X_SHIFT) | np.asarray(y, np.int64))
+
+
+def clamp_sql(expr: str, level: int) -> str:
+    """Clamp an integer SQL expression into [0, 2^level - 1]."""
+    return f"LEAST(GREATEST({expr}, 0), {(1 << level) - 1})"
+
+
+def grid_index_sql(lon_expr: str, lat_expr: str, level: int,
+                   projection: Projection = EQUIRECT) -> tuple[str, str]:
+    """(x, y) SQL of the grid square holding a point: only floor and
+    int64 arithmetic after the projection, so both engines agree."""
+    n = 1 << level
+    fx = f"({lon_expr} + 180.0) / 360.0"
+    fy = projection.y_sql(lat_expr)
+    return (clamp_sql(f"CAST(FLOOR({fx} * {n}) AS BIGINT)", level),
+            clamp_sql(f"CAST(FLOOR({fy} * {n}) AS BIGINT)", level))
+
+
+def pack_sql(level: int, x: str, y: str) -> str:
+    return (f"(CAST({level} AS BIGINT) * {1 << LEVEL_SHIFT}"
+            f" + {x} * {1 << X_SHIFT} + {y})")
+
+
+def grid_sql_expr(lon_expr: str, lat_expr: str, level: int,
+                  projection: Projection = EQUIRECT) -> str:
+    """The one SQL encoder (ANSI: valid Spark SQL and DuckDB)."""
+    return pack_sql(level, *grid_index_sql(lon_expr, lat_expr, level,
+                                           projection))
 
 
 def latlng_to_cell(lat, lng, res: int):
     """Vectorized encode. Accepts scalars or arrays; returns int64."""
     if not 0 <= res <= MAX_RES:
         raise ValueError(f"res must be in [0, {MAX_RES}]")
-    lat = np.asarray(lat, dtype=np.float64)
-    lng = np.asarray(lng, dtype=np.float64)
-    n = np.int64(1) << res
-    cx = np.clip(np.floor((lng + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-    cy = np.clip(np.floor((lat + 90.0) / 180.0 * n), 0, n - 1).astype(np.int64)
-    cell = (np.int64(res) << _RES_SHIFT) | (cx << _CX_SHIFT) | cy
-    if cell.ndim == 0:
-        return int(cell)
-    return cell
+    cell = pack_xy(res, *grid_xy(lng, lat, res))
+    return int(cell) if cell.ndim == 0 else cell
 
 
 def cell_sql_expr(lng_expr: str, lat_expr: str, res: int) -> str:
-    """ANSI-SQL fragment computing the identical cell id (DuckDB oracle
-    parity; also valid Spark SQL). Uses only floor + int64 arithmetic so
-    both engines produce bit-identical results."""
-    n = 1 << res
-    return (
-        f"(CAST({res} AS BIGINT) * {1 << _RES_SHIFT}"
-        f" + LEAST(GREATEST(CAST(FLOOR(({lng_expr} + 180.0) / 360.0 * {n}) AS BIGINT), 0), {n - 1}) * {1 << _CX_SHIFT}"
-        f" + LEAST(GREATEST(CAST(FLOOR(({lat_expr} + 90.0) / 180.0 * {n}) AS BIGINT), 0), {n - 1}))"
-    )
+    """SQL twin of ``latlng_to_cell`` (Spark SQL and DuckDB)."""
+    return grid_sql_expr(lng_expr, lat_expr, res)
 
 
 def cell_to_res_xy(cell):
     cell = np.asarray(cell, dtype=np.int64)
-    res = (cell >> _RES_SHIFT).astype(np.int64)
-    cx = (cell >> _CX_SHIFT) & np.int64((1 << _CX_SHIFT) - 1)
-    cy = cell & np.int64((1 << _CX_SHIFT) - 1)
+    res = (cell >> LEVEL_SHIFT).astype(np.int64)
+    cx = (cell >> X_SHIFT) & np.int64((1 << X_SHIFT) - 1)
+    cy = cell & np.int64((1 << X_SHIFT) - 1)
     return res, cx, cy
+
+
+def square_bounds(level, x, y, projection: Projection = EQUIRECT):
+    """(lon_min, lat_min, lon_max, lat_max) of squares (vectorized)."""
+    n = np.exp2(level)
+    lat_a, lat_b = projection.lat_np(y / n), projection.lat_np((y + 1) / n)
+    return (x / n * 360.0 - 180.0, np.minimum(lat_a, lat_b),
+            (x + 1) / n * 360.0 - 180.0, np.maximum(lat_a, lat_b))
 
 
 def cell_bounds(cell):
     """(lng_min, lat_min, lng_max, lat_max) of a cell (vectorized)."""
-    res, cx, cy = cell_to_res_xy(cell)
-    n = np.exp2(res)
-    w, h = 360.0 / n, 180.0 / n
-    lng0 = cx * w - 180.0
-    lat0 = cy * h - 90.0
-    return lng0, lat0, lng0 + w, lat0 + h
+    return square_bounds(*cell_to_res_xy(cell))
 
 
 def cell_center(cell):
@@ -90,53 +159,47 @@ def cell_center(cell):
 
 def grid_disk(cell: int, k: int = 1) -> list:
     """All cells within Chebyshev distance k (clamped at grid edges)."""
-    res, cx, cy = cell_to_res_xy(np.int64(cell))
-    res, cx, cy = int(res), int(cx), int(cy)
+    res, cx, cy = (int(v) for v in cell_to_res_xy(np.int64(cell)))
     n = 1 << res
-    out = []
-    for dx in range(-k, k + 1):
-        x = cx + dx
-        if not 0 <= x < n:
-            continue
-        for dy in range(-k, k + 1):
-            y = cy + dy
-            if not 0 <= y < n:
-                continue
-            out.append((res << _RES_SHIFT) | (x << _CX_SHIFT) | y)
-    return out
+    return [int(pack_xy(res, x, y))
+            for x in range(max(cx - k, 0), min(cx + k, n - 1) + 1)
+            for y in range(max(cy - k, 0), min(cy + k, n - 1) + 1)]
+
+
+def _squares(lo, hi):
+    """Every grid square (x, y) from corner square lo to hi, x-major."""
+    xs, ys = np.meshgrid(np.arange(lo[0], hi[0] + 1),
+                         np.arange(lo[1], hi[1] + 1), indexing="ij")
+    return xs.ravel(), ys.ravel()
 
 
 def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float,
                res: int) -> np.ndarray:
     """All cells whose rectangle intersects the envelope (int64 array)."""
-    n = 1 << res
-    cx0 = int(np.clip(np.floor((xmin + 180.0) / 360.0 * n), 0, n - 1))
-    cx1 = int(np.clip(np.floor((xmax + 180.0) / 360.0 * n), 0, n - 1))
-    cy0 = int(np.clip(np.floor((ymin + 90.0) / 180.0 * n), 0, n - 1))
-    cy1 = int(np.clip(np.floor((ymax + 90.0) / 180.0 * n), 0, n - 1))
-    xs = np.arange(cx0, cx1 + 1, dtype=np.int64)
-    ys = np.arange(cy0, cy1 + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(xs, ys, indexing="ij")
-    return ((np.int64(res) << _RES_SHIFT) | (gx << _CX_SHIFT) | gy).ravel()
+    lo, hi = (grid_xy(x, y, res) for x, y in ((xmin, ymin), (xmax, ymax)))
+    return pack_xy(res, *_squares(lo, hi))
 
 
-def polygon_cover(rings, res: int, exact: bool = True) -> np.ndarray:
-    """Cells intersecting a multi-ring polygon (coarse index for J2).
-
-    Starts from the bbox cover, then (``exact=True``) keeps only cells
-    whose rectangle genuinely intersects the polygon: a cell corner or
-    center inside the polygon (even-odd), a polygon vertex inside the
-    cell, or a cell-boundary/ring edge crossing. A superset of the true
-    cover is always acceptable (the ray-cast refine is exact); the
-    pruning just shrinks the broadcast side.
-    """
-    rings = [np.asarray(r, dtype=np.float64) for r in rings]
+def polygon_cover(rings, level: int,
+                  projection: Projection = EQUIRECT) -> np.ndarray:
+    """Ids of the grid squares intersecting a multi-ring polygon: the
+    one cover for cells (J2) and tiles (J4). The squares of the
+    vertices' bbox are tested as lon/lat rectangles against the
+    polygon as given (testing projected vertices would be unsound
+    under Mercator, where a lon/lat edge bows away from its chord).
+    Squares holding a vertex are kept outright; the rest go through
+    ``rings.rects_intersect_polygon``. A superset is always fine: the
+    ray-cast refine is exact, pruning only shrinks the broadcast."""
+    rings = [close_ring(r) for r in rings]
     allpts = np.vstack(rings)
-    cells = cover_bbox(allpts[:, 0].min(), allpts[:, 1].min(),
-                       allpts[:, 0].max(), allpts[:, 1].max(), res)
-    if not exact or cells.size <= 4:
-        return cells
-
-    x0, y0, x1, y1 = cell_bounds(cells)
-    keep = rects_intersect_polygon(rings, x0, y0, x1, y1)
-    return cells[keep]
+    v = np.column_stack(grid_xy(allpts[:, 0], allpts[:, 1], level,
+                                projection))
+    lo, hi = v.min(axis=0), v.max(axis=0)
+    xs, ys = _squares(lo, hi)
+    keep = np.zeros(xs.size, dtype=bool)
+    keep[(v[:, 0] - lo[0]) * (hi[1] - lo[1] + 1) + v[:, 1] - lo[1]] = True
+    rest = np.flatnonzero(~keep)
+    if rest.size:
+        keep[rest] = rects_intersect_polygon(
+            rings, *square_bounds(level, xs[rest], ys[rest], projection))
+    return pack_xy(level, xs[keep], ys[keep])

@@ -292,9 +292,8 @@ def points_in_polygon(points: np.ndarray, rings) -> np.ndarray:
 
 def rects_intersect_polygon(rings, x0, y0, x1, y1) -> np.ndarray:
     """Which axis-aligned rectangles [x0,x1]x[y0,y1] intersect the
-    even-odd polygon ``rings``. The three-stage cover test shared by
-    ``cells.polygon_cover`` and ``tiles.tile_cover`` (one copy so a
-    predicate fix can never diverge between cell and tile covers):
+    even-odd polygon ``rings``. The three-stage cover test behind
+    ``cells.polygon_cover``, the one cover of cells and tiles:
 
       (a) a rect corner or center inside the polygon (even-odd);
       (b) a polygon vertex inside the rect;

@@ -1291,9 +1291,7 @@ def dedup_incremental(new_docs: DataFrame, ledger: DataFrame,
 
     Scale: the new shard shuffles once on the content hash (the
     survivor window); the ledger side is a semi-join on fixed-width
-    hashes — broadcast while it fits, shuffle-hash beyond, and a
-    Bloom prefilter of the ledger (``bloom_bits_table``) turns the
-    miss path map-side when the ledger outgrows broadcast."""
+    hashes — broadcast while it fits, shuffle-hash beyond."""
     from .sample import _qcol
     for c in ("_il_h", "_rn"):
         if c in new_docs.columns:

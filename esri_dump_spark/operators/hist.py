@@ -271,9 +271,10 @@ def hist_orders_oracle_sql(lo: float, hi: float, bins: int,
                c.cnt AS bucket_n,
                CAST(c.cum - c.cnt AS BIGINT) AS cum_before,
                {qest} AS q_est
-        FROM t JOIN c ON c.o_orderpriority = t.o_orderpriority
-                     AND c.cum >= t.target
-                     AND (c.cum - c.cnt) < t.target
+        FROM t JOIN c
+          ON c.o_orderpriority IS NOT DISTINCT FROM t.o_orderpriority
+         AND c.cum >= t.target
+         AND (c.cum - c.cnt) < t.target
         ORDER BY t.o_orderpriority, t.permille"""
 
 

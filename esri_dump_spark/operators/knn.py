@@ -81,17 +81,11 @@ def neighbor_cells_expr(lon_col: str, lat_col: str, res: int,
         raise ValueError(
             f"width={width}: must be in [1, 8] — a wider disk fans the "
             "query side out quadratically; use a coarser res instead")
-    n = 1 << res
-    cx = (f"LEAST(GREATEST(CAST(FLOOR(({lon_col} + 180.0) / 360.0 * {n}) "
-          f"AS BIGINT), 0), {n - 1})")
-    cy = (f"LEAST(GREATEST(CAST(FLOOR(({lat_col} + 90.0) / 180.0 * {n}) "
-          f"AS BIGINT), 0), {n - 1})")
-    cells = []
-    for dx in range(-width, width + 1):
-        for dy in range(-width, width + 1):
-            x = f"LEAST(GREATEST({cx} + ({dx}), 0), {n - 1})"
-            y = f"LEAST(GREATEST({cy} + ({dy}), 0), {n - 1})"
-            cells.append(f"(CAST({1 << 58} AS BIGINT) * {res} + {x} * {1 << 29} + {y})")
+    cx, cy = C.grid_index_sql(lon_col, lat_col, res)
+    cells = [C.pack_sql(res, C.clamp_sql(f"{cx} + ({dx})", res),
+                        C.clamp_sql(f"{cy} + ({dy})", res))
+             for dx in range(-width, width + 1)
+             for dy in range(-width, width + 1)]
     return "array(" + ", ".join(cells) + ")"
 
 

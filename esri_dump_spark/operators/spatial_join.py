@@ -66,11 +66,12 @@ def _parse_rings(rings_json: str) -> list[np.ndarray]:
             for r in json.loads(rings_json)]
 
 
-def _cover(polygons: pd.DataFrame, res: int) -> pd.DataFrame:
-    """(cell, poly_id) rows of the exact cell cover of every
-    (poly_id, rings_json) row — the one cover loop behind both the
-    driver-built dimension and the executor-side ``polygon_cover_df``."""
-    cells = [C.polygon_cover(_parse_rings(rj), res, exact=True)
+def _cover(polygons: pd.DataFrame, level: int,
+           projection: C.Projection = C.EQUIRECT) -> pd.DataFrame:
+    """(cell, poly_id) cover rows of every (poly_id, rings_json) row:
+    the one cover loop, for cells and (``tiles.polygon_tile_index``)
+    tiles. Pass ``_COVER_SCHEMA`` explicitly: inference fails on 0 rows."""
+    cells = [C.polygon_cover(json.loads(rj), level, projection)
              for rj in polygons["rings_json"]]
     pids = [np.full(c.shape, pid, dtype=np.int64)
             for c, pid in zip(cells, polygons["poly_id"])]
@@ -214,7 +215,6 @@ def point_in_polygon_join(points: DataFrame, polygons,
         polygons = polygons.select(*cols).toPandas()
     cover_pdf, rings_by_pid = dim if dim is not None \
         else build_polygon_dim(polygons, res)
-    # explicit schema: inference fails on an empty polygon set
     cell_index = spark.createDataFrame(cover_pdf, _COVER_SCHEMA)
 
     @pandas_udf("boolean")

@@ -3,65 +3,42 @@
 Tile scheme parity: the reference's TileJSON emits ``scheme: 'xyz'``
 (/root/reference/lib/tilejson.ts:28,199) with zoom rules from layer
 LODs (:138-154). The engine makes that concrete: every image row gets
-a deterministic (z, x, y) tile id from its lon/lat (standard slippy /
-Web-Mercator math), polygons get their tile *cover* at the same zoom,
-and the assignment is an equi-join on the packed 64-bit tile id.
+a deterministic (z, x, y) tile id from its lon/lat, polygons get their
+tile *cover* at the same zoom, and the assignment is an equi-join on
+the packed 64-bit tile id.
 
-The tile id expression is pure SQL (ln/tan/cos/floor) — identical in
-Spark and DuckDB, so the whole operator is oracle-checkable. Hot tiles
-(dense cities) go through operators.skew.salted_join when the join is
-shuffle-shaped; with a broadcast polygon side no salting is needed.
+A tile is a square of the one grid in ``kernels/cells.py`` (layout,
+encoders, cover) under its ``MERCATOR`` projection, zoom z = level z.
+The tile id is pure SQL (ln/tan/cos/floor), identical in Spark and
+DuckDB, so the operator is oracle-checkable. Hot tiles go through
+operators.skew.salted_join when the join is shuffle-shaped; a
+broadcast polygon side needs no salting.
 """
 
 from __future__ import annotations
 
-import json
-import math
-
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..kernels.rings import close_ring, rects_intersect_polygon
+from ..kernels import cells as C
+from .spatial_join import _COVER_SCHEMA, _cover
 
-__all__ = ["tile_id_sql_expr", "assign_tiles", "tile_xy", "tile_cover",
+__all__ = ["tile_id_sql_expr", "assign_tiles", "tile_xy",
            "polygon_tile_index", "raster_vector_join", "parent_tile_sql",
            "tile_pyramid_rollup"]
 
-_Z_SHIFT, _X_SHIFT = 58, 29
-
 
 def tile_id_sql_expr(lon_col: str, lat_col: str, z: int) -> str:
-    """Packed tile id (z << 58 | x << 29 | y) as a SQL expression.
-    Standard slippy: x from lon linearly, y from Mercator latitude."""
-    n = 1 << z
-    # standard Web-Mercator latitude clamp: keeps LN/TAN finite at the
-    # poles and matches the slippy tile grid's defined range
-    latc = f"LEAST(GREATEST(CAST({lat_col} AS DOUBLE), -85.05112878), 85.05112878)"
-    xt = (f"LEAST(GREATEST(CAST(FLOOR((CAST({lon_col} AS DOUBLE) + 180.0) / 360.0 * {n}) "
-          f"AS BIGINT), 0), {n - 1})")
-    merc = (f"(1.0 - LN(TAN(RADIANS({latc})) + 1.0 / COS(RADIANS({latc}))) / PI()) / 2.0")
-    yt = (f"LEAST(GREATEST(CAST(FLOOR({merc} * {n}) AS BIGINT), 0), {n - 1})")
-    return (f"(CAST({z} AS BIGINT) * {1 << _Z_SHIFT} + {xt} * {1 << _X_SHIFT} + {yt})")
+    """Packed tile id of a point as a SQL expression."""
+    return C.grid_sql_expr(f"CAST({lon_col} AS DOUBLE)", lat_col, z,
+                           C.MERCATOR)
 
 
 def tile_xy(lon, lat, z: int):
-    """NumPy twin of tile_id_sql_expr (used for covers + tests)."""
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.clip(np.asarray(lat, dtype=np.float64), -85.05112878, 85.05112878)
-    n = 1 << z
-    xt = np.clip(np.floor((lon + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-    rad = np.radians(lat)
-    merc = (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / math.pi) / 2.0
-    yt = np.clip(np.floor(merc * n), 0, n - 1).astype(np.int64)
-    return xt, yt
-
-
-def _pack(z: int, x, y):
-    return (np.int64(z) << _Z_SHIFT) | (np.asarray(x, np.int64) << _X_SHIFT) \
-        | np.asarray(y, np.int64)
+    """NumPy twin of tile_id_sql_expr: the (x, y) tile indices."""
+    return C.grid_xy(lon, lat, z, C.MERCATOR)
 
 
 def assign_tiles(df: DataFrame, z: int, lon_col: str = "lon",
@@ -70,48 +47,15 @@ def assign_tiles(df: DataFrame, z: int, lon_col: str = "lon",
     return df.withColumn(out, F.expr(tile_id_sql_expr(lon_col, lat_col, z)))
 
 
-def _to_tile_space(ring: np.ndarray, z: int) -> np.ndarray:
-    """Continuous tile coordinates of ring vertices (planar polygon in
-    tile space — covers computed there so cell rectangles are exact)."""
-    n = 1 << z
-    tx = (ring[:, 0] + 180.0) / 360.0 * n
-    rad = np.radians(np.clip(ring[:, 1], -85.05112878, 85.05112878))
-    ty = (1.0 - np.log(np.tan(rad) + 1.0 / np.cos(rad)) / math.pi) / 2.0 * n
-    return np.column_stack([tx, ty])
-
-
-def tile_cover(rings, z: int) -> np.ndarray:
-    """Tile ids intersecting a multi-ring polygon at zoom z."""
-    trs = [_to_tile_space(close_ring(np.asarray(r, np.float64)), z)
-           for r in rings]
-    allpts = np.vstack(trs)
-    n = 1 << z
-    x0 = int(np.clip(np.floor(allpts[:, 0].min()), 0, n - 1))
-    x1 = int(np.clip(np.floor(allpts[:, 0].max()), 0, n - 1))
-    y0 = int(np.clip(np.floor(allpts[:, 1].min()), 0, n - 1))
-    y1 = int(np.clip(np.floor(allpts[:, 1].max()), 0, n - 1))
-    xs, ys = np.meshgrid(np.arange(x0, x1 + 1), np.arange(y0, y1 + 1),
-                         indexing="ij")
-    xs, ys = xs.ravel(), ys.ravel()
-    # unit tile rects in tile space; the shared three-stage cover test
-    # (kernels/rings.py) keeps cell and tile covers on ONE predicate
-    keep = rects_intersect_polygon(
-        trs, xs.astype(np.float64), ys.astype(np.float64),
-        (xs + 1).astype(np.float64), (ys + 1).astype(np.float64))
-    return _pack(z, xs[keep], ys[keep])
-
-
 def parent_tile_sql(tile_col: str, z_child: int) -> str:
     """Packed tile id of the parent (zoom z_child - 1): unpack x/y,
     halve, repack — pure integer SQL (shiftright/&), codegen-friendly
     in Spark and identical arithmetic to the slippy pyramid."""
-    mask = (1 << _X_SHIFT) - 1
-    z = z_child - 1
-    x = f"(shiftright({tile_col}, {_X_SHIFT}) & {mask})"
+    mask = (1 << C.X_SHIFT) - 1
+    x = f"(shiftright({tile_col}, {C.X_SHIFT}) & {mask})"
     y = f"(({tile_col}) & {mask})"
-    return (f"(CAST({z} AS BIGINT) * {1 << _Z_SHIFT}"
-            f" + shiftright({x}, 1) * {1 << _X_SHIFT}"
-            f" + shiftright({y}, 1))")
+    return C.pack_sql(z_child - 1, f"shiftright({x}, 1)",
+                      f"shiftright({y}, 1)")
 
 
 def tile_pyramid_rollup(df: DataFrame, z_leaf: int, z_top: int,
@@ -148,17 +92,11 @@ def tile_pyramid_rollup(df: DataFrame, z_leaf: int, z_top: int,
 
 def polygon_tile_index(spark: SparkSession, polygons: pd.DataFrame,
                        z: int) -> DataFrame:
-    """(tile_id, poly_id) cover table (small, broadcast side)."""
-    tiles, pids = [], []
-    for rec in polygons.itertuples(index=False):
-        cover = tile_cover(json.loads(rec.rings_json), z)
-        tiles.append(cover)
-        pids.append(np.full(cover.shape, rec.poly_id, dtype=np.int64))
-    pdf = pd.DataFrame({
-        "tile_id": np.concatenate(tiles) if tiles else np.array([], np.int64),
-        "poly_id": np.concatenate(pids) if pids else np.array([], np.int64),
-    })
-    return spark.createDataFrame(pdf)
+    """(tile_id, poly_id) cover table (small, broadcast side): the
+    shared cover loop at grid level z under the Mercator projection."""
+    return (spark.createDataFrame(_cover(polygons, z, C.MERCATOR),
+                                  _COVER_SCHEMA)
+            .withColumnRenamed("cell", "tile_id"))
 
 
 def raster_vector_join(images: DataFrame, polygons: pd.DataFrame, z: int,

@@ -64,7 +64,7 @@ def test_cover_bbox_and_polygon_cover():
     ring = np.array([[0.0, 0.0], [10.0, 10.0], [10.2, 10.0], [0.2, 0.0],
                      [0.0, 0.0]])
     bbox_cover = C.cover_bbox(0, 0, 10.2, 10.0, 10)
-    exact = C.polygon_cover([ring], 10, exact=True)
+    exact = C.polygon_cover([ring], 10)
     assert 0 < exact.size < bbox_cover.size
     assert np.isin(exact, bbox_cover).all()
     # every point sampled inside the polygon lands in a covered cell

@@ -112,12 +112,24 @@ def test_quantiles_match_python_and_grid_bound(spark):
 
 
 def test_quantiles_null_group_key_survives(spark):
-    df = spark.createDataFrame(
-        [("a", 10.0), (None, 20.0), (None, 30.0)], "g string, x double")
+    """A NULL group key keeps its quantiles, in the operator and in its
+    DuckDB twin (run on the same rows), and the two agree bit for bit."""
+    data = [("a", 10.0), (None, 20.0), (None, 30.0)]
+    df = spark.createDataFrame(data, "g string, x double")
     h = hist_sketch(df, "x", LO, HI, BINS, ("g",))
-    q = hist_quantiles(h, LO, HI, BINS, ("g",), (500,))
-    rows = {r["g"]: r["n_total"] for r in q.collect()}
+    q = hist_quantiles(h, LO, HI, BINS, ("g",), (500,)).collect()
+    rows = {r["g"]: r["n_total"] for r in q}
     assert rows == {"a": 1, None: 2}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE orders (o_orderpriority VARCHAR, "
+                "o_totalprice DOUBLE)")
+    con.executemany("INSERT INTO orders VALUES (?, ?)", data)
+    du = con.execute(hist_orders_oracle_sql(LO, HI, BINS, (500,))).fetchall()
+
+    def key(r):
+        return (r[0] is None, r[0] or "", r[1])
+    assert (sorted((tuple(r)[:6] + (bits(r["q_est"]),) for r in q), key=key)
+            == sorted((r[:6] + (bits(r[6]),) for r in du), key=key))
 
 
 def test_hist_twin_bit_exact(spark, sf_dir):

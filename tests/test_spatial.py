@@ -17,7 +17,7 @@ from esri_dump_spark.operators.knn import (
     knn_join, knn_join_exact, radius_join, radius_join_exact,
     radius_res, safe_radius)
 from esri_dump_spark.operators.tiles import (
-    assign_tiles, tile_xy, tile_cover, raster_vector_join)
+    assign_tiles, tile_xy, raster_vector_join)
 from esri_dump_spark.operators.skew import (
     hot_keys, salted_repartition, two_phase_agg, salted_join)
 from esri_dump_spark.sources.fixtures import polygons_pdf, images_pdf
@@ -129,7 +129,8 @@ def test_pip_join_semi_anti_partition(spark, points_pdf):
 def test_pip_join_empty_polygon_set(spark, points_pdf):
     """Zero polygons, in either input form: left_anti keeps every point,
     inner and left_semi return nothing (the cover table has no rows to
-    infer a schema from)."""
+    infer a schema from). The tile join shares the cover loop and
+    returns nothing too."""
     cols = "poly_id long, rings_json string, name string"
     empty = spark.createDataFrame([], cols)
     pts = spark.createDataFrame(points_pdf)
@@ -139,6 +140,7 @@ def test_pip_join_empty_polygon_set(spark, points_pdf):
         for how in ("inner", "left_semi"):
             assert point_in_polygon_join(
                 pts, polys, how=how).count() == 0, (kind, how)
+    assert raster_vector_join(pts, empty.toPandas(), z=8).count() == 0
 
 
 def test_pip_join_uses_broadcast(spark, points_pdf):
@@ -374,7 +376,7 @@ def test_tile_cover_and_raster_vector_join(spark):
     holed = polys[polys["name"] == "holed"].iloc[0]
     rings = json.loads(holed.rings_json)
     z = 12
-    cover = set(tile_cover(rings, z).tolist())
+    cover = set(C.polygon_cover(rings, z, C.MERCATOR).tolist())
     cx = (DEFAULT_EXTENT[0] + DEFAULT_EXTENT[2]) / 2
     cy = (DEFAULT_EXTENT[1] + DEFAULT_EXTENT[3]) / 2
     xt, yt = tile_xy(cx - 0.9, cy - 0.9, z)  # inside shell
@@ -430,7 +432,7 @@ def test_tile_pyramid_rollup_invariants(spark):
     import numpy as np
     from esri_dump_spark.operators.tiles import (assign_tiles,
                                                  tile_pyramid_rollup,
-                                                 tile_xy, _pack)
+                                                 tile_xy)
     n = 4000
     pts = spark.range(n).selectExpr(
         "cast(id as double) / 50.0 - 40.0 AS lon",
@@ -448,7 +450,7 @@ def test_tile_pyramid_rollup_invariants(spark):
     lon = np.arange(n) / 50.0 - 40.0
     lat = (np.arange(n) * 7 % 3000) / 50.0 - 30.0
     xt, yt = tile_xy(lon, lat, 4)
-    ids, counts = np.unique(_pack(4, xt, yt), return_counts=True)
+    ids, counts = np.unique(C.pack_xy(4, xt, yt), return_counts=True)
     got4 = {r.tile_id: r.n for r in by_z[4]}
     assert got4 == dict(zip(ids.tolist(), counts.tolist()))
     plan = out._jdf.queryExecution().executedPlan().toString()
