@@ -3,28 +3,26 @@ ray-cast refine.
 
 Physical plan (SURVEY.md §2.5, §4):
 
-  polygons (small)  --driver--> cover cells per polygon (kernels.cells)
-                                -> tiny (cell, poly_id) DataFrame
+  polygons (small)  --driver--> rings parsed once into closed float64
+                                arrays, feeding both the cover
+                                (kernels.cells) and the refine
+                                -> tiny (cell, poly_id[, poly_name])
   points (huge)     --JVM-----> cell id attached via a pure SQL
-                                expression (whole-stage codegen;
-                                no Python in the hot path)
-  coarse:           points JOIN broadcast(cells) ON cell  (equi-join,
-                    no shuffle of the big side)
-  refine:           Arrow-batched pandas UDF running the exact
-                    reference ray-cast (even-odd, half-open edge rule)
-                    against the candidate polygon's rings, looked up
-                    by poly_id
+                                expression (whole-stage codegen)
+  coarse:           points JOIN broadcast(cells) ON cell  (the one
+                    broadcast; no shuffle of the big side)
+  refine:           Arrow-batched pandas UDF: one stable sort of the
+                    batch by poly_id, then the exact reference ray
+                    cast (even-odd, half-open edge rule) once per
+                    polygon run (``pip_refine``)
 
-There is one point-in-polygon path. A polygon table given as a Spark
-DataFrame is collected to the driver once and then takes the same
-route as a pandas one: polygon sets of thousands of parcels cover on
-the driver in a fraction of a second (3,000 parcels at res 11 in about
-0.3 s on a 4-vCPU host).
+There is one point-in-polygon path: a Spark DataFrame of polygons is
+collected to the driver once and covered there like a pandas one
+(3,000 parcels at res 11 in about 0.3 s on a 4-vCPU host).
 
 At 10^12 rows the coarse phase is the only data movement and it is
-broadcast-shaped; the refine is embarrassingly parallel. Skewed hot
-cells don't hurt a broadcast join (no shuffle by key), but per-cell
-*aggregations* downstream do — those use operators.skew.
+broadcast-shaped; the refine is embarrassingly parallel. Hot cells
+don't hurt a broadcast join, but per-cell aggregations do (skew.py).
 
 The refine predicate is exactly the reference's
 ``coordinatesContainPoint`` (lib/rings2geojson.ts:54-64) extended to
@@ -33,6 +31,7 @@ multi-ring even-odd, vectorized over the Arrow batch.
 
 from __future__ import annotations
 
+import functools
 import json
 
 import numpy as np
@@ -43,10 +42,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..kernels import cells as C
-from ..kernels.rings import points_in_polygon, close_ring
+from ..kernels.rings import close_ring, points_in_polygon, polygons_intersect
 
-__all__ = ["attach_cell", "build_polygon_dim", "point_in_polygon_join",
-           "polygon_cover_df", "point_in_polygon_join_dist",
+__all__ = ["attach_cell", "build_polygon_dim", "pip_refine",
+           "point_in_polygon_join", "polygon_cover_df",
+           "point_in_polygon_join_dist",
            "polygon_intersects_join", "DEFAULT_RES"]
 
 DEFAULT_RES = 12
@@ -66,29 +66,48 @@ def _parse_rings(rings_json: str) -> list[np.ndarray]:
             for r in json.loads(rings_json)]
 
 
-def _cover(polygons: pd.DataFrame, level: int,
+def _cover(rings, keys: pd.DataFrame, level: int,
            projection: C.Projection = C.EQUIRECT) -> pd.DataFrame:
-    """(cell, poly_id) cover rows of every (poly_id, rings_json) row:
-    the one cover loop, for cells and (``tiles.polygon_tile_index``)
-    tiles. Pass ``_COVER_SCHEMA`` explicitly: inference fails on 0 rows."""
-    cells = [C.polygon_cover(json.loads(rj), level, projection)
-             for rj in polygons["rings_json"]]
-    pids = [np.full(c.shape, pid, dtype=np.int64)
-            for c, pid in zip(cells, polygons["poly_id"])]
-    return pd.DataFrame({
-        "cell": np.concatenate(cells) if cells else np.array([], np.int64),
-        "poly_id": np.concatenate(pids) if pids else np.array([], np.int64),
-    })
+    """(cell, *keys) rows: every grid square covering a polygon, with
+    that polygon's ``keys`` row (poly_id[, poly_name]); ``rings`` holds
+    the polygons' ``_parse_rings`` arrays in ``keys`` order. The one
+    cover loop, for cells and (``tiles.polygon_tile_index``) tiles.
+    Pass the schema explicitly: inference fails on 0 rows."""
+    cells = [C.polygon_cover(r, level, projection) for r in rings]
+    rows = np.repeat(np.arange(len(keys)), [c.size for c in cells])
+    out = keys.iloc[rows].reset_index(drop=True)
+    out.insert(0, "cell", np.concatenate(cells or [np.array([], np.int64)]))
+    return out
 
 
 def build_polygon_dim(polygons: pd.DataFrame, res: int = DEFAULT_RES):
-    """Precompute the static polygon dimension: (cell-cover pdf,
-    rings-by-poly-id dict). At scale this is built once per polygon
-    set and reused across every query/run against it."""
-    rings_by_pid = {int(pid): [a.tolist() for a in _parse_rings(rj)]
-                    for pid, rj in zip(polygons["poly_id"],
-                                       polygons["rings_json"])}
-    return _cover(polygons, res), rings_by_pid
+    """The static polygon dimension, built once per polygon set: (cover
+    pdf of (cell, poly_id[, poly_name]), {poly_id: closed float64 ring
+    arrays}). Each ``rings_json`` is parsed once, for both the cover
+    and the refine. ``poly_id`` must be unique."""
+    pids = polygons["poly_id"]
+    dup = sorted(set(pids[pids.duplicated()].tolist()))
+    if dup:
+        raise ValueError(f"duplicate poly_id in polygon set: {dup}")
+    rings = [_parse_rings(rj) for rj in polygons["rings_json"]]
+    keys = polygons[[c for c in ("poly_id", "name") if c in polygons]]
+    cover = _cover(rings, keys.rename(columns={"name": "poly_name"}), res)
+    return cover, dict(zip(map(int, pids), rings))
+
+
+def pip_refine(lon: np.ndarray, lat: np.ndarray, poly_id: np.ndarray,
+               rings_by_pid: dict) -> np.ndarray:
+    """bool[m]: is candidate i inside ``rings_by_pid[poly_id[i]]``. One
+    stable sort groups the batch by polygon, ``points_in_polygon`` runs
+    once per run and scatters back: bit-identical to masking the batch
+    once per polygon, without the per-polygon scans."""
+    pts = np.column_stack([lon, lat]).astype(np.float64, copy=False)
+    out = np.zeros(len(pts), dtype=bool)
+    order = np.argsort(poly_id, kind="stable")
+    pids, starts = np.unique(poly_id[order], return_index=True)
+    for pid, idx in zip(pids, np.split(order, starts[1:])):
+        out[idx] = points_in_polygon(pts[idx], rings_by_pid[int(pid)])
+    return out
 
 
 def polygon_cover_df(polygons: DataFrame,
@@ -101,7 +120,8 @@ def polygon_cover_df(polygons: DataFrame,
     way and re-attaches geometry by id after pair dedup."""
     def run(batches):
         for b in batches:
-            yield _cover(b, res)
+            yield _cover(map(_parse_rings, b["rings_json"]),
+                         b[["poly_id"]], res)
 
     return polygons.select("poly_id", "rings_json").mapInPandas(
         run, schema=_COVER_SCHEMA)
@@ -113,18 +133,9 @@ def _poly_intersect_refine():
     ``rings_json`` columns, Arrow-batched. Geometry parses are memoized
     per batch (each polygon typically appears in many candidate
     pairs)."""
-    from ..kernels.rings import polygons_intersect
-
     @pandas_udf("boolean")
     def refine(a: pd.Series, b: pd.Series) -> pd.Series:
-        cache: dict = {}
-
-        def parsed(s):
-            r = cache.get(s)
-            if r is None:
-                r = cache[s] = _parse_rings(s)
-            return r
-
+        parsed = functools.lru_cache(maxsize=None)(_parse_rings)
         out = np.fromiter(
             (polygons_intersect(parsed(x), parsed(y))
              for x, y in zip(a, b)), dtype=bool, count=len(a))
@@ -175,12 +186,9 @@ def polygon_intersects_join(left: DataFrame, right: DataFrame,
                .select("id_a", "id_b"))
     if how == "inner":
         return matched
-    if how == "left_semi":
+    if how in ("left_semi", "left_anti"):
         return left.join(matched.select(F.col("id_a").alias("poly_id"))
-                         .distinct(), "poly_id", "left_semi")
-    if how == "left_anti":
-        return left.join(matched.select(F.col("id_a").alias("poly_id"))
-                         .distinct(), "poly_id", "left_anti")
+                         .distinct(), "poly_id", how)
     raise ValueError(f"unknown how={how!r}")
 
 
@@ -191,55 +199,45 @@ def point_in_polygon_join(points: DataFrame, polygons,
                           id_col: str | None = None) -> DataFrame:
     """Spatial join of a big point table against a small polygon table.
 
-    how='inner'      -> point rows x matching poly_id (+name)
+    how='inner'      -> point rows + poly_id (+ poly_name) per match
     how='left_semi'  -> point rows inside >= 1 polygon (deduped)
     how='left_anti'  -> point rows inside none
 
     ``polygons`` — (poly_id, rings_json[, name]) as a pandas frame or a
     Spark DataFrame; a DataFrame is collected to the driver once, after
-    which both take the same path. A polygon ``name`` comes back as
-    ``poly_name``, so it never clashes with a points column.
+    which both take the same path. ``poly_id`` must be unique. A
+    polygon ``name`` comes back as ``poly_name`` after ``poly_id``, so
+    it never clashes with a points column.
 
     ``id_col`` — the point-identity column the semi/anti variants key
-    on; defaults to the first column of ``points`` (the historical
-    convention), but callers whose id is not leftmost must pass it —
-    keying on position silently breaks under column reorder.
+    on; defaults to the first column of ``points``. Pass it when the
+    id is not leftmost: keying on position breaks under column reorder.
 
-    ``dim`` — optional precomputed ``build_polygon_dim`` result so the
-    static dimension isn't rebuilt per query.
+    ``dim`` — a precomputed ``build_polygon_dim`` result, reused across
+    queries; ``polygons`` is then not read.
     """
-    spark = points.sparkSession
-    if isinstance(polygons, DataFrame):
-        cols = [c for c in ("poly_id", "rings_json", "name")
-                if c in polygons.columns]
-        polygons = polygons.select(*cols).toPandas()
-    cover_pdf, rings_by_pid = dim if dim is not None \
-        else build_polygon_dim(polygons, res)
-    cell_index = spark.createDataFrame(cover_pdf, _COVER_SCHEMA)
+    if dim is None:
+        if isinstance(polygons, DataFrame):
+            cols = [c for c in ("poly_id", "rings_json", "name")
+                    if c in polygons.columns]
+            polygons = polygons.select(*cols).toPandas()
+        dim = build_polygon_dim(polygons, res)
+    cover_pdf, rings_by_pid = dim
+    schema = _COVER_SCHEMA + (", poly_name string"
+                              if "poly_name" in cover_pdf else "")
+    cell_index = points.sparkSession.createDataFrame(cover_pdf, schema)
 
     @pandas_udf("boolean")
-    def pip_refine(lon: pd.Series, lat: pd.Series,
-                   poly_id: pd.Series) -> pd.Series:
-        out = np.zeros(len(lon), dtype=bool)
-        pts = np.column_stack([lon.to_numpy(np.float64),
-                               lat.to_numpy(np.float64)])
-        for pid in poly_id.unique():
-            mask = (poly_id == pid).to_numpy()
-            rings = [np.asarray(r, np.float64) for r in rings_by_pid[int(pid)]]
-            out[mask] = points_in_polygon(pts[mask], rings)
-        return pd.Series(out)
+    def refine(lon: pd.Series, lat: pd.Series,
+               poly_id: pd.Series) -> pd.Series:
+        return pd.Series(pip_refine(lon.to_numpy(), lat.to_numpy(),
+                                    poly_id.to_numpy(), rings_by_pid))
 
     pts = attach_cell(points, lon_col, lat_col, res)
-    cand = pts.join(F.broadcast(cell_index), "cell", "inner")
-    matched = cand.filter(pip_refine(F.col(lon_col), F.col(lat_col),
-                                     F.col("poly_id")))
-
+    matched = (pts.join(F.broadcast(cell_index), "cell", "inner")
+               .filter(refine(F.col(lon_col), F.col(lat_col),
+                              F.col("poly_id"))))
     if how == "inner":
-        if "name" in polygons.columns:
-            names = spark.createDataFrame(polygons[["poly_id", "name"]],
-                                          "poly_id long, name string") \
-                .withColumnRenamed("name", "poly_name")
-            matched = matched.join(F.broadcast(names), "poly_id", "left")
         return matched.drop("cell")
     key = id_col if id_col is not None else points.columns[0]
     if key not in points.columns:
@@ -247,8 +245,7 @@ def point_in_polygon_join(points: DataFrame, polygons,
     if how == "left_semi":
         return matched.select(*points.columns).dropDuplicates([key])
     if how == "left_anti":
-        matched_ids = matched.select(key).distinct()
-        return points.join(matched_ids, key, "left_anti")
+        return points.join(matched.select(key).distinct(), key, how)
     raise ValueError(f"unknown how={how!r}")
 
 

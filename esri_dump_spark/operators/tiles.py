@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels import cells as C
-from .spatial_join import _COVER_SCHEMA, _cover
+from .spatial_join import _COVER_SCHEMA, _cover, _parse_rings
 
 __all__ = ["tile_id_sql_expr", "assign_tiles", "tile_xy",
            "polygon_tile_index", "raster_vector_join", "parent_tile_sql",
@@ -94,8 +94,9 @@ def polygon_tile_index(spark: SparkSession, polygons: pd.DataFrame,
                        z: int) -> DataFrame:
     """(tile_id, poly_id) cover table (small, broadcast side): the
     shared cover loop at grid level z under the Mercator projection."""
-    return (spark.createDataFrame(_cover(polygons, z, C.MERCATOR),
-                                  _COVER_SCHEMA)
+    cover = _cover(map(_parse_rings, polygons["rings_json"]),
+                   polygons[["poly_id"]], z, C.MERCATOR)
+    return (spark.createDataFrame(cover, _COVER_SCHEMA)
             .withColumnRenamed("cell", "tile_id"))
 
 

@@ -9,9 +9,11 @@ from __future__ import annotations
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from esri_dump_spark.kernels.rings import (close_ring, points_in_ring,
+from esri_dump_spark.kernels.rings import (close_ring, points_in_polygon,
+                                           points_in_ring,
                                            ring_is_clockwise,
                                            rings_to_geojson)
+from esri_dump_spark.operators.spatial_join import pip_refine
 
 coord = st.floats(min_value=-180.0, max_value=180.0,
                   allow_nan=False, allow_infinity=False, width=64)
@@ -120,3 +122,61 @@ def test_polygons_intersect_matches_rect_oracle(rects_a, rects_b):
                    for (ax0, ay0, ax1, ay1) in boxes_a
                    for (bx0, by0, bx1, by1) in boxes_b)
     assert polygons_intersect(rings_a, rings_b) == expected
+
+
+# ---- sorted PIP refine vs the per-polygon masked path -----------------
+
+def _masked_refine(pts, poly_id, rings_by_pid):
+    """The path ``pip_refine`` replaces: mask the batch once per
+    polygon and call ``points_in_polygon`` on the masked rows."""
+    out = np.zeros(len(poly_id), dtype=bool)
+    for pid in np.unique(poly_id):
+        mask = poly_id == pid
+        out[mask] = points_in_polygon(pts[mask], rings_by_pid[int(pid)])
+    return out
+
+
+# integer vertices make horizontal edges common; points on the integer
+# and half-integer grid land on vertices and on edges
+grid_ring = st.lists(st.tuples(st.integers(0, 8), st.integers(0, 8)),
+                     min_size=3, max_size=9)
+grid_polygon = st.lists(grid_ring, min_size=1, max_size=3)  # holes too
+
+
+@given(st.dictionaries(st.integers(-2**40, 2**40), grid_polygon,
+                       min_size=1, max_size=5),
+       st.data())
+@settings(max_examples=150, deadline=None)
+def test_pip_refine_matches_masked_path(polygons, data):
+    rings_by_pid = {pid: [close_ring(np.array(r, dtype=np.float64))
+                          for r in rings]
+                    for pid, rings in polygons.items()}
+    # shuffled, interleaved ids; short lists give single-row runs and
+    # the empty batch
+    ids = data.draw(st.lists(st.sampled_from(sorted(polygons)),
+                             max_size=60))
+    half = st.integers(0, 16).map(lambda v: v / 2)
+    pts = np.array(data.draw(st.lists(st.tuples(half, half),
+                                      min_size=len(ids),
+                                      max_size=len(ids))),
+                   dtype=np.float64).reshape(-1, 2)
+    poly_id = np.array(ids, dtype=np.int64)
+    got = pip_refine(pts[:, 0], pts[:, 1], poly_id, rings_by_pid)
+    exp = _masked_refine(pts, poly_id, rings_by_pid)
+    assert got.dtype == bool and np.array_equal(got, exp)
+
+
+def test_pip_refine_empty_and_blocked_batches():
+    """The empty batch, and runs long enough for the kernel's
+    cache-blocked evaluation, match the masked path."""
+    ring = close_ring(np.array([[0, 0], [0, 4], [4, 4], [4, 0]], float))
+    hole = close_ring(np.array([[1, 1], [3, 1], [3, 3], [1, 3]], float))
+    rings_by_pid = {7: [ring, hole], -3: [ring]}
+    empty = np.array([], dtype=np.float64)
+    assert pip_refine(empty, empty, np.array([], np.int64),
+                      rings_by_pid).shape == (0,)
+    rng = np.random.default_rng(0)
+    pts = rng.integers(-1, 10, size=(140_000, 2)) / 2
+    poly_id = rng.choice([7, -3], size=len(pts))
+    got = pip_refine(pts[:, 0], pts[:, 1], poly_id, rings_by_pid)
+    assert np.array_equal(got, _masked_refine(pts, poly_id, rings_by_pid))

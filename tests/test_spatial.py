@@ -583,6 +583,32 @@ def test_pip_join_points_with_name_column(spark, points_pdf):
         assert got == exp, kind
 
 
+def test_pip_join_inner_columns(spark, points_pdf):
+    """Inner output columns are the point columns, then poly_id, then
+    poly_name when the polygons are named — for either polygon form."""
+    pts = spark.createDataFrame(points_pdf)
+    named = polygons_pdf()
+    for extra, polys in ((["poly_name"], named),
+                         ([], named.drop(columns="name"))):
+        exp = list(points_pdf.columns) + ["poly_id"] + extra
+        for kind, inp in _polygon_inputs(spark, polys).items():
+            got = point_in_polygon_join(pts, inp, res=9).columns
+            assert got == exp, (kind, got)
+
+
+def test_pip_join_rejects_duplicate_poly_id(spark, points_pdf):
+    """Two polygons sharing a poly_id cannot both be refined by id, and
+    cells both cover would double candidate rows: the polygon
+    dimension refuses the set, naming the id, in either form."""
+    polys = polygons_pdf()
+    polys.loc[17, "poly_id"] = 16  # 'multi' takes the id of 'holed'
+    pts = spark.createDataFrame(points_pdf)
+    for kind, inp in _polygon_inputs(spark, polys).items():
+        for how in ("inner", "left_semi", "left_anti"):
+            with pytest.raises(ValueError, match=r"duplicate poly_id.*\[16\]"):
+                point_in_polygon_join(pts, inp, res=10, how=how)
+
+
 def test_two_phase_agg_allows_distinct_prefixed_column(spark):
     """Only the DISTINCT keyword is rejected — a column literally named
     distinct_id is a plain decomposable count."""
