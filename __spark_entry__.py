@@ -2856,13 +2856,7 @@ def oracle_sql() -> dict[str, str]:
         # i.e. md5(gram || ':')); n_hit_grams counts DISTINCT shared
         # grams (both gram tables are per-side distinct pre-join)
         "decontaminate": f"""
-            WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS w
-                       FROM documents),
-            g AS (SELECT DISTINCT doc_id,
-                         array_to_string(list_slice(w, i, i + 3), ' ')
-                             AS gram
-                  FROM d, UNNEST(generate_series(1, greatest(len(w) - 3,
-                       1))) AS t(i)),
+            WITH g AS ({D.word_grams_sql(4)}),
             h AS (SELECT doc_id,
                          {SM.hash_u60_sql("gram")} AS gh
                   FROM g),
@@ -2902,13 +2896,8 @@ def oracle_sql() -> dict[str, str]:
             JOIN region ON n_regionkey = r_regionkey
             WHERE r_name = 'ASIA'
             GROUP BY n_name""",
-        "ngram_jaccard": """
-            WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS w
-                       FROM documents),
-            g AS (SELECT DISTINCT doc_id,
-                         array_to_string(list_slice(w, i, i + 2), ' ') AS gram
-                  FROM d, UNNEST(generate_series(1, greatest(len(w) - 2, 1)))
-                       AS t(i)),
+        "ngram_jaccard": f"""
+            WITH g AS ({D.word_grams_sql(3)}),
             sz AS (SELECT doc_id, count(*) AS n_grams FROM g GROUP BY doc_id),
             sh AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                           count(*) AS shared
@@ -2921,13 +2910,8 @@ def oracle_sql() -> dict[str, str]:
             FROM sh JOIN sz sa ON sh.id_a = sa.doc_id
                  JOIN sz sb ON sh.id_b = sb.doc_id
             WHERE shared * 1.0 / (sa.n_grams + sb.n_grams - shared) >= 0.5""",
-        "ngram_jaccard_capped": """
-            WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS w
-                       FROM documents),
-            g AS (SELECT DISTINCT doc_id,
-                         array_to_string(list_slice(w, i, i + 2), ' ') AS gram
-                  FROM d, UNNEST(generate_series(1, greatest(len(w) - 2, 1)))
-                       AS t(i)),
+        "ngram_jaccard_capped": f"""
+            WITH g AS ({D.word_grams_sql(3)}),
             sz AS (SELECT doc_id, count(*) AS n_grams FROM g GROUP BY doc_id),
             rare AS (SELECT gram FROM g GROUP BY gram
                      HAVING count(*) <= 10),

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .text import _lower_sql
+
 __all__ = [
     "content_ledger", "dedup_incremental",
     "dedup_incremental_oracle_sql", "planted_content_sql",
@@ -35,7 +37,8 @@ __all__ = [
     "minhash_sql_cte",
     "minhash_pairs_oracle_sql", "minhash_permutation_consts",
     "simhash", "simhash_pairs", "simhash_sql_cte",
-    "ngram_jaccard_pairs", "word_grams", "decontaminate",
+    "ngram_jaccard_pairs", "word_grams", "word_grams_sql",
+    "decontaminate",
     "embedding_near_dup", "embedding_cluster_dedup", "phash_near_dup",
     "phash_cluster_dedup", "crossmodal_near_dup",
     "embedding_cluster_dedup_oracle_sql",
@@ -132,7 +135,7 @@ def minhash_signature(df: DataFrame, text_col: str, num_hashes: int = 64,
             out_rows.append(m.min(axis=0).astype(np.int64))
         return pd.Series(out_rows)
 
-    return _spread(df).withColumn(out, sig(F.col(text_col)))
+    return _spread(df).withColumn(out, sig(F.expr(_lower_sql(text_col))))
 
 
 def minhash_sql_cte(id_col: str = "doc_id", text_col: str = "text",
@@ -140,27 +143,15 @@ def minhash_sql_cte(id_col: str = "doc_id", text_col: str = "text",
                     shingle_n: int = 5) -> str:
     """DuckDB CTE chain recomputing the identical minhash signature —
     yields a relation (id_col, s0..s{k-1})."""
-    n = shingle_n
     a_c, b_c = minhash_permutation_consts(num_hashes)
     mins = ", ".join(
         f"min((hv * {a_c[k]} + {b_c[k]}) % {MINHASH_P}) AS s{k}"
         for k in range(num_hashes))
     return f"""
-        _mt0 AS (SELECT {id_col},
-                        rpad(lower(coalesce({text_col}, '')),
-                             CAST(greatest(length(lower(coalesce({text_col}, ''))),
-                                           {n}) AS INTEGER), ' ') AS _t
-                 FROM {table}),
-        _mg AS (SELECT DISTINCT {id_col},
-                       substr(_t, CAST(i AS INTEGER), {n}) AS gram
-                FROM _mt0,
-                     UNNEST(generate_series(1, greatest(length(_t) - {n - 1}, 1)))
-                     AS u(i)),
-        _mh AS (SELECT {id_col},
-                       CAST(CAST(concat('0x', substr(md5(gram), 1, 15))
-                                 AS UBIGINT) AS BIGINT) % {MINHASH_P} AS hv
-                FROM _mg),
-        _ms AS (SELECT {id_col}, {mins} FROM _mh GROUP BY {id_col})"""
+        {_char_gram_hashes_sql("_mh", id_col, text_col, table, shingle_n)},
+        _ms AS (SELECT {id_col}, {mins}
+                FROM (SELECT {id_col}, hv % {MINHASH_P} AS hv FROM _mh) _mp
+                GROUP BY {id_col})"""
 
 
 def minhash_band_predicate_sql(num_hashes: int = 64,
@@ -453,10 +444,11 @@ SIMHASH_BITS = 60  # 15 hex chars of md5 — fits signed 64-bit in every engine
 def _md5_shingle_hashes(text: str, n: int,
                         cache: dict | None = None) -> np.ndarray:
     """uint64 hashes of distinct character n-grams: the low 60 bits of
-    md5 (first 15 hex chars). md5 — not blake2b like minhash — because
-    the whole derivation is reproducible in ANSI SQL (DuckDB:
-    CAST(concat('0x', substr(md5(g), 1, 15)) AS UBIGINT)), which makes
-    the simhash operator oracle-able end to end.
+    md5 (first 15 hex chars). The whole derivation is reproducible in
+    ANSI SQL (``_char_gram_hashes_sql`` is its DuckDB twin), which
+    makes the minhash and simhash operators oracle-able end to end.
+    No case folding here: their UDFs receive text already folded by
+    ``text._lower_sql`` in the JVM projection.
 
     The value is computed as ``int.from_bytes(digest[:8]) >> 4`` —
     bit-identical to ``int(hexdigest[:15], 16)`` (first 15 hex chars =
@@ -466,7 +458,7 @@ def _md5_shingle_hashes(text: str, n: int,
     relative to the corpus)."""
     import hashlib
     md5 = hashlib.md5
-    t = (text or "").lower()
+    t = text or ""
     if len(t) < n:
         t = t.ljust(n)
     grams = {t[i:i + n] for i in range(max(len(t) - n + 1, 1))}
@@ -485,6 +477,29 @@ def _md5_shingle_hashes(text: str, n: int,
                 md5(g.encode("utf-8")).digest()[:8], "big") >> 4
         out[j] = v
     return out
+
+
+def _char_gram_hashes_sql(name: str, id_col: str, text_col: str,
+                          table: str, n: int) -> str:
+    """THE DuckDB char-shingle spelling, shared by the minhash and
+    simhash twins: CTE ``name`` of ``(id_col, hv)`` rows over
+    ``table``, one per distinct ``n``-gram of the folded text
+    right-padded to ``n``, hv = its md5-u60 (the twin of
+    ``_md5_shingle_hashes``; a NULL text hashes like '')."""
+    t = _lower_sql(f"coalesce({text_col}, '')")
+    return f"""{name} AS (
+          SELECT {id_col},
+                 CAST(CAST(concat('0x', substr(md5(gram), 1, 15))
+                           AS UBIGINT) AS BIGINT) AS hv
+          FROM (SELECT DISTINCT {id_col},
+                       substr(_t, CAST(i AS INTEGER), {n}) AS gram
+                FROM (SELECT {id_col},
+                             rpad({t}, CAST(greatest(length({t}), {n})
+                                            AS INTEGER), ' ') AS _t
+                      FROM {table}) _t0,
+                     UNNEST(generate_series(1,
+                            greatest(length(_t) - {n - 1}, 1))) AS u(i)
+               ) _g)"""
 
 
 def simhash(df: DataFrame, text_col: str, out: str = "simhash",
@@ -507,7 +522,7 @@ def simhash(df: DataFrame, text_col: str, out: str = "simhash",
             vals[i] = np.int64(v.astype(np.int64))
         return pd.Series(vals)
 
-    return _spread(df).withColumn(out, sh(F.col(text_col)))
+    return _spread(df).withColumn(out, sh(F.expr(_lower_sql(text_col))))
 
 
 def simhash_sql_cte(id_col: str = "doc_id", text_col: str = "text",
@@ -515,26 +530,12 @@ def simhash_sql_cte(id_col: str = "doc_id", text_col: str = "text",
     """DuckDB CTE chain computing the identical 60-bit simhash per row
     of ``table`` — the independent SQL twin of the pandas UDF above.
     Yields a relation (id_col, simhash)."""
-    n = shingle_n
     bit_terms = " + ".join(
         f"CASE WHEN sum(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END)"
         f" > 0 THEN CAST({1 << b} AS BIGINT) ELSE 0 END"
         for b in range(SIMHASH_BITS))
     return f"""
-        _t0 AS (SELECT {id_col},
-                       rpad(lower(coalesce({text_col}, '')),
-                            CAST(greatest(length(lower(coalesce({text_col}, ''))),
-                                          {n}) AS INTEGER), ' ') AS _t
-                FROM {table}),
-        _g AS (SELECT DISTINCT {id_col},
-                      substr(_t, CAST(i AS INTEGER), {n}) AS gram
-               FROM _t0,
-                    UNNEST(generate_series(1, greatest(length(_t) - {n - 1}, 1)))
-                    AS u(i)),
-        _h AS (SELECT {id_col},
-                      CAST(CAST(concat('0x', substr(md5(gram), 1, 15))
-                                AS UBIGINT) AS BIGINT) AS hv
-               FROM _g),
+        {_char_gram_hashes_sql("_h", id_col, text_col, table, shingle_n)},
         _sh AS (SELECT {id_col}, ({bit_terms}) AS simhash
                 FROM _h GROUP BY {id_col})"""
 
@@ -723,29 +724,10 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
     missed only if every gram it shares is corpus-hot (df > max_df) —
     rare for near-duplicate text, and the standard max-df trade in
     dedup pipelines."""
-    # hoist the word split into a column: inside the lambda it would be
-    # re-evaluated per gram (no common-subexpression elimination across
-    # higher-order-function bodies), turning tokenization O(words^2).
-    # Gram dedup is PER DOCUMENT, so array_distinct before the explode
-    # does it narrowly — a .distinct() after the explode would pay a
-    # full-corpus exchange for the same result.
-    # NULL texts are dropped like word_grams does: Spark's concat_ws
-    # over the NULL slice would otherwise manufacture an '' gram (and
-    # a Jaccard-1 pair between two NULL docs) while the SQL twin's
-    # NULL propagates to no gram row at all
-    grams = _spread(df.filter(F.col(text_col).isNotNull())).select(
-        F.col(id_col),
-        F.expr(f"split(lower({text_col}), ' ')").alias("_w")
-    ).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.expr(
-            f"transform(sequence(1, greatest(size(_w) - {n - 1}, 1)),"
-            f" i -> concat_ws(' ', slice(_w, i, {n})))"
-        ))).alias("gram"))
     # referenced three times below (sizes + both join sides): cache so
     # the explode runs once. At warehouse scale this is a materialized
     # intermediate table instead of an executor cache.
-    grams = grams.cache()
+    grams = word_grams(_spread(df), id_col, text_col, n).cache()
 
     if max_df is None:
         sizes = grams.groupBy(id_col).agg(
@@ -868,25 +850,42 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str,
 def word_grams(df: DataFrame, id_col: str, text_col: str,
                n: int) -> DataFrame:
     """Distinct word n-grams per document as ``(id, gram)`` rows —
-    the same derivation ``ngram_jaccard_pairs`` uses inline (lower,
-    single-space split, space-joined windows, per-document
-    ``array_distinct`` BEFORE the explode so dedup is narrow). Pure
-    built-in expressions: JVM-side and SQL-oracle-able. Documents
-    shorter than ``n`` words emit their whole text as one gram
-    (the ``greatest(..., 1)`` floor), matching the SQL twins. NULL
-    texts emit NO grams: without the filter, Spark's ``concat_ws``
-    over the NULL slice would manufacture an ``''`` gram while the
-    SQL twin's NULL propagates to no row — the size(NULL) family of
-    cross-engine divergence."""
+    THE Spark word-gram spelling (``word_grams_sql`` is its DuckDB
+    twin): ``text._lower_sql`` fold, single-space split, space-joined
+    windows, per-document ``array_distinct`` BEFORE the explode so
+    dedup is narrow. The split is hoisted into a column: inside the
+    lambda it would be re-evaluated per gram (no common-subexpression
+    elimination across higher-order-function bodies). Documents
+    shorter than ``n`` words emit their whole text as one gram (the
+    ``greatest(..., 1)`` floor). NULL texts emit NO grams: without
+    the filter, Spark's ``concat_ws`` over the NULL slice would
+    manufacture an ``''`` gram while the SQL twin's NULL propagates
+    to no row — the size(NULL) family of cross-engine divergence."""
     return (df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col),
-        F.expr(f"split(lower({text_col}), ' ')").alias("_w")
+        F.expr(f"split({_lower_sql(text_col)}, ' ')").alias("_w")
     ).select(
         F.col(id_col),
         F.explode(F.array_distinct(F.expr(
             f"transform(sequence(1, greatest(size(_w) - {n - 1}, 1)),"
             f" i -> concat_ws(' ', slice(_w, i, {n})))"
         ))).alias("gram")))
+
+
+def word_grams_sql(n: int, table: str = "documents", pred: str = "TRUE",
+                   id_col: str = "doc_id", text_col: str = "text") -> str:
+    """THE DuckDB word-gram spelling, twin of ``word_grams``: a SELECT
+    of distinct ``(id_col, gram)`` rows over the rows of ``table``
+    satisfying ``pred`` (NULL texts emit no grams)."""
+    return f"""SELECT DISTINCT {id_col},
+                   array_to_string(list_slice(w, i, i + {n - 1}), ' ')
+                       AS gram
+            FROM (SELECT {id_col},
+                         string_split({_lower_sql(text_col)}, ' ') AS w
+                  FROM {table}
+                  WHERE ({pred}) AND {text_col} IS NOT NULL) _ww,
+                 UNNEST(generate_series(1, greatest(len(w) - {n - 1},
+                                                    1))) AS _gi(i)"""
 
 
 def decontaminate(train: DataFrame, eval_df: DataFrame, id_col: str,

@@ -184,8 +184,6 @@ def govern_corpus_oracle_sql(id_col: str = "doc_id",
     from .sample import hash_u60_sql, split_case_sql
     quality = X.quality_score_sql(text_col)["quality"]
     dupw = X.repetition_signals_sql(text_col)["dup_word_frac"]
-    n = decontam_n
-    gram = (f"array_to_string(list_slice(w, i, i + {n - 1}), ' ')")
     hash60 = hash_u60_sql("gram")
     return f"""
         WITH _qual AS (
@@ -194,18 +192,10 @@ def govern_corpus_oracle_sql(id_col: str = "doc_id",
         _rep AS (
             SELECT {id_col}, {text_col} FROM _qual
             WHERE {dupw} <= {max_dup_word_frac}),
-        _tw AS (SELECT {id_col},
-                       string_split(lower({text_col}), ' ') AS w
-                FROM _rep),
-        _tg AS (SELECT DISTINCT {id_col}, {gram} AS gram
-                FROM _tw, UNNEST(generate_series(1,
-                     greatest(len(w) - {n - 1}, 1))) AS _gi(i)),
-        _ew AS (SELECT string_split(lower({text_col}), ' ') AS w
-                FROM {table} WHERE ({eval_pred})
-                  AND {text_col} IS NOT NULL),
-        _eg AS (SELECT DISTINCT {gram} AS gram
-                FROM _ew, UNNEST(generate_series(1,
-                     greatest(len(w) - {n - 1}, 1))) AS _gi(i)),
+        _tg AS ({D.word_grams_sql(decontam_n, "_rep", "TRUE",
+                                  id_col, text_col)}),
+        _eg AS ({D.word_grams_sql(decontam_n, table, eval_pred,
+                                  id_col, text_col)}),
         _eh AS (SELECT DISTINCT {hash60} AS gh FROM _eg),
         _th AS (SELECT {id_col}, {hash60} AS gh FROM _tg),
         _dirty AS (SELECT DISTINCT {id_col}

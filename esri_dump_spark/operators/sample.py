@@ -67,10 +67,12 @@ def hash_u60(col, seed: str = ""):
 
 
 def hash_u60_expr(value_expr: str, seed: str = "") -> str:
-    """``hash_u60`` as a Spark-SQL expression string — for LAMBDA
-    positions (inside ``transform``/``aggregate``) where the Column
-    form cannot reach. Same derivation, adjacent on purpose; the
-    DuckDB spelling stays ``hash_u60_sql``."""
+    """``hash_u60`` as a Spark-SQL expression string over a SQL
+    expression (quote identifiers with ``_qident`` first) — for
+    LAMBDA positions (inside ``transform``/``aggregate``) where the
+    Column form cannot reach, and for SQL-string plans (sketch,
+    winnow). Same derivation, adjacent on purpose; the DuckDB
+    spelling stays ``hash_u60_sql``."""
     return (f"CAST(conv(substring(md5(concat(CAST({value_expr} AS "
             f"STRING), ':{_sql_quote(seed)}')), 1, 15), 16, 10) "
             f"AS BIGINT)")

@@ -33,11 +33,12 @@ sub-ulp ``ln`` divergence between Java and libm cannot reorder rows.
 
 Cross-engine hardening (round-5 review findings):
 
-- Case folding is ASCII ``translate``, not ``lower()``: Java's
-  locale-aware toLowerCase diverges from DuckDB on non-ASCII input
-  (U+0130 lowers to 'i'+U+0307 in Java — an extra symbol token).
-  translate() has identical 1:1 semantics in both engines, and query
-  terms are ASCII-only anyway.
+- Case folding is the one ASCII ``translate`` fold of every text
+  operator, ``text._lower_sql``, not ``lower()``: Java's Unicode
+  toLowerCase diverges from DuckDB on non-ASCII input (U+0130 lowers
+  to 'i'+U+0307 in Java — an extra symbol token). translate() has
+  identical 1:1 semantics in both engines, and query terms are
+  ASCII-only anyway.
 - The tokenizer uses an explicit whitespace class, not ``\\s`` (Java
   includes U+000B in ``\\s``, RE2 does not — the CLAUDE.md shared
   regex subset). ``text._TOKEN_RE``'s ``\\s`` spelling is
@@ -56,7 +57,7 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import _spark_re
+from .text import _lower_sql, _spark_re
 
 __all__ = ["bm25_topk", "bm25_topk_oracle_sql", "rrf_fuse",
            "rrf_weight_sql"]
@@ -70,16 +71,6 @@ _BM25_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\f\r]"
 # run or a pure digit run (a mixed 'gpt4' string would tokenize as
 # 'gpt','4' and silently never match)
 _TERM_RE = re.compile(r"(?:[a-z]+|[0-9]+)\Z")
-
-_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-_LOWER = "abcdefghijklmnopqrstuvwxyz"
-
-
-def _lower_sql(col: str) -> str:
-    """ASCII case fold with identical semantics in Spark and DuckDB
-    (1:1 translate — never locale/Unicode lower(), see module doc)."""
-    return f"translate({col}, '{_UPPER}', '{_LOWER}')"
-
 
 def _check_terms(terms: list[str]) -> None:
     if not terms:

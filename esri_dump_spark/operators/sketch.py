@@ -72,7 +72,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .sample import _qcol, _qident, hash_u60_sql, _sql_quote
+from .sample import _qcol, _qident, hash_u60_expr, hash_u60_sql
 
 __all__ = ["hll_register_table", "hll_estimate", "hll_merge",
            "hll_corrected", "cm_sketch", "cm_estimate",
@@ -168,7 +168,7 @@ def hll_register_table(df: DataFrame, value_col: str,
     _check_m(m)
     groups = [str(g) for g in group_cols]
     _no_clash(set(groups), "_hv", "reg", "rho", "m_j")
-    hv = hash_u60_spark_sql(_qident(value_col), seed)
+    hv = hash_u60_expr(_qident(value_col), seed)
     rho = hll_rho_sql("_hv", m, SPARK)
     # the hash is LET-BOUND as the lambda variable _hv and the
     # one-element array is unrolled by a Generate, which no optimizer
@@ -181,15 +181,6 @@ def hll_register_table(df: DataFrame, value_col: str,
                            f"inline_outer({reg_rho})"))
     return (keyed.groupBy(*[_qcol(g) for g in groups], F.col("reg"))
                  .agg(F.max("rho").alias("m_j")))
-
-
-def hash_u60_spark_sql(value_expr: str, seed: str = "") -> str:
-    """``sample.hash_u60`` as a Spark-SQL string (the ``conv``
-    spelling — Spark has no UBIGINT cast). Mirrors
-    ``sample.hash_u60_expr`` but accepts a pre-quoted expression."""
-    return (f"CAST(conv(substring(md5(concat(CAST({value_expr} AS"
-            f" STRING), ':{_sql_quote(seed)}')), 1, 15), 16, 10)"
-            f" AS BIGINT)")
 
 
 def hll_merge(*register_tables: DataFrame) -> DataFrame:
@@ -255,7 +246,7 @@ def cm_bucket_sql(value_expr: str, row: int, width: int,
                   seed: str, hash_fn) -> str:
     """THE count-min bucket spelling: row ``d`` uses the seed-suffix
     ``:cm<d>`` of the shared md5-u60 family, reduced mod ``width``.
-    ``hash_fn`` is ``hash_u60_spark_sql`` or ``sample.hash_u60_sql``
+    ``hash_fn`` is ``sample.hash_u60_expr`` or ``sample.hash_u60_sql``
     so both engines derive identical cells."""
     return f"{hash_fn(value_expr, f'{seed}:cm{row}')} % {width}"
 
@@ -287,7 +278,7 @@ def cm_sketch(df: DataFrame, key_col: str, depth: int = 4,
          if weight_col is not None else "CAST(1 AS BIGINT)")
     buckets = ", ".join(
         cm_bucket_sql(_qident(key_col), d, width, seed,
-                      hash_u60_spark_sql)
+                      hash_u60_expr)
         for d in range(depth))
     # posexplode_outer: the plain generator makes Spark infer a
     # `size(array(...)) > 0` filter that re-evaluates all `depth`
@@ -316,7 +307,7 @@ def cm_estimate(sketch: DataFrame, keys: DataFrame, key_col: str,
     _no_clash({str(key_col)}, "d", "bucket", "cnt", "_bk", str(out))
     buckets = ", ".join(
         cm_bucket_sql(_qident(key_col), d, width, seed,
-                      hash_u60_spark_sql)
+                      hash_u60_expr)
         for d in range(depth))
     probes = (keys.where(_qcol(key_col).isNotNull())
                   .select(_qcol(key_col)).distinct()
@@ -343,7 +334,7 @@ def bloom_pos_sql(value_expr: str, j: int, m_bits: int,
                   seed: str, hash_fn) -> str:
     """THE bit-position spelling: hash ``j`` of ``k`` uses the seed
     suffix ``:bf<j>`` of the shared md5-u60 family, reduced mod
-    ``m_bits``. ``hash_fn`` is ``hash_u60_spark_sql`` or
+    ``m_bits``. ``hash_fn`` is ``sample.hash_u60_expr`` or
     ``sample.hash_u60_sql`` so both engines set identical bits."""
     return f"{hash_fn(value_expr, f'{seed}:bf{j}')} % {m_bits}"
 
@@ -382,7 +373,7 @@ def bloom_bits_table(df: DataFrame, key_col: str,
     _no_clash({str(key_col)}, "_ps", "pos", "word_idx", "bits")
     poss = ", ".join(
         bloom_pos_sql(_qident(key_col), j, m_bits, seed,
-                      hash_u60_spark_sql)
+                      hash_u60_expr)
         for j in range(k))
     word, mask = _bloom_word_mask(SPARK)
     # explode_outer for the same reason as cm_sketch: the inferred
@@ -426,7 +417,7 @@ def bloom_probe(bits: DataFrame, keys: DataFrame, key_col: str,
               "_ps", "pos", "word_idx", "bits", "_mask", str(out))
     poss = ", ".join(
         bloom_pos_sql(_qident(key_col), j, m_bits, seed,
-                      hash_u60_spark_sql)
+                      hash_u60_expr)
         for j in range(k))
     word, mask = _bloom_word_mask(SPARK)
     probes = (keys.where(_qcol(key_col).isNotNull())
@@ -535,12 +526,12 @@ def cm_words_oracle_sql(depth: int, width: int, min_est: int,
 def bloom_decon_oracle_sql(n: int, m_bits: int, k: int,
                            seed: str = "") -> str:
     """DuckDB twin of the ``bloom_decontaminate`` entry query: the
-    identical word-gram md5-u60 hashes (decontaminate's spelling),
+    identical word-gram md5-u60 hashes (``dedup.word_grams_sql``),
     the identical Bloom bit table over the eval slice, and per-train-
     doc gram / flagged / exact-hit counts — ALL-INTEGER, exact by
     construction (false positives replicate identically because both
     engines set and test the same bits)."""
-    from .sample import hash_u60_sql
+    from .dedup import word_grams_sql
     _check_bloom(m_bits, k)
     word, mask = _bloom_word_mask(DUCK)
     build = "\n          UNION ALL ".join(
@@ -554,13 +545,7 @@ def bloom_decon_oracle_sql(n: int, m_bits: int, k: int,
         for j in range(k))
     hit = "CASE WHEN (coalesce(bits, 0) & _mask) = _mask THEN 1 ELSE 0 END"
     return f"""
-        WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS w
-                   FROM documents),
-        g AS (SELECT DISTINCT doc_id,
-                     array_to_string(list_slice(w, i, i + {n - 1}), ' ')
-                         AS gram
-              FROM d, UNNEST(generate_series(1, greatest(len(w) - {n - 1},
-                   1))) AS t(i)),
+        WITH g AS ({word_grams_sql(n)}),
         h AS (SELECT doc_id, {hash_u60_sql('gram')} AS gh FROM g),
         eg AS (SELECT DISTINCT gh FROM h WHERE doc_id % 7 = 0),
         tg AS (SELECT doc_id, gh FROM h WHERE doc_id % 7 <> 0),

@@ -37,6 +37,18 @@ def _spark_re(pat: str) -> str:
     return pat.replace("\\", "\\\\")
 
 
+# THE case fold of every text operator and twin, one SQL string in
+# both engines. Never Unicode lower(): Java folds U+0130 to
+# 'i'+U+0307 and a final capital sigma to U+03C2, DuckDB to 'i', U+03C3.
+_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+_LOWER = "abcdefghijklmnopqrstuvwxyz"
+
+
+def _lower_sql(col: str) -> str:
+    """ASCII case fold of SQL expression ``col`` (Spark and DuckDB)."""
+    return f"translate({col}, '{_UPPER}', '{_LOWER}')"
+
+
 def token_count(df: DataFrame, text_col: str = "text",
                 out: str = "n_tokens") -> DataFrame:
     """Number of BPE-ish tokens (letter runs / digit runs / symbols).
@@ -162,28 +174,30 @@ def language_id_sql(text_col: str = "text") -> str:
 
 # ----------------------------------------------------------- fingerprint
 
-def fingerprint(df: DataFrame, text_col: str = "text",
-                out: str = "fp") -> DataFrame:
-    """Deterministic 64-bit-equivalent document fingerprint: first 16
-    hex chars of SHA-256 over the normalized text (lowercased,
-    whitespace collapsed). Kept as hex string so Spark and the DuckDB
-    oracle agree byte-for-byte."""
-    norm = F.trim(F.regexp_replace(F.lower(text_col), r"\s+", " "))
-    return df.withColumn(out, F.substring(F.sha2(norm, 256), 1, 16))
-
-
-def fingerprint_sql(text_col: str = "text") -> str:
-    norm = f"trim(regexp_replace(lower({text_col}), '\\s+', ' ', 'g'))"
-    return f"substring(sha256({norm}), 1, 16)"
-
-
-# ----------------------------------------------------------- repetition
-
 # whitespace class spelled explicitly so Spark (java.util.regex) and
 # DuckDB (RE2) agree: java's \s includes \x0B, RE2's does not — a
 # web-scraped vertical tab would silently split differently per engine
 _WS_CLASS = r"[ \t\n\f\r]+"
 
+
+def fingerprint(df: DataFrame, text_col: str = "text",
+                out: str = "fp") -> DataFrame:
+    """Deterministic 64-bit-equivalent document fingerprint: first 16
+    hex chars of SHA-256 over the normalized text (ASCII-folded,
+    ``_WS_CLASS`` runs collapsed to one space, trimmed). Kept as hex
+    string so Spark and the DuckDB oracle agree byte-for-byte."""
+    norm = F.trim(F.regexp_replace(F.expr(_lower_sql(text_col)),
+                                   _WS_CLASS, " "))
+    return df.withColumn(out, F.substring(F.sha2(norm, 256), 1, 16))
+
+
+def fingerprint_sql(text_col: str = "text") -> str:
+    norm = (f"trim(regexp_replace({_lower_sql(text_col)},"
+            f" '{_WS_CLASS}', ' ', 'g'))")
+    return f"substring(sha256({norm}), 1, 16)"
+
+
+# ----------------------------------------------------------- repetition
 
 def repetition_signals(df: DataFrame,
                        text_col: str = "text") -> DataFrame:
@@ -217,14 +231,14 @@ def repetition_signals(df: DataFrame,
     for c in ("_rs_lines", "_rs_words", "_rs_sorted"):
         if c in df.columns:
             raise ValueError(f"`{c}` column would collide — rename it")
-    lower = F.lower(F.col(text_col))
+    folded = F.expr(_lower_sql(text_col))
     d = (df.withColumn("_rs_lines", F.filter(
-            F.transform(F.split(lower, "\n"), lambda l: F.trim(l)),
+            F.transform(F.split(folded, "\n"), lambda l: F.trim(l)),
             lambda l: l != ""))
          # whitespace-RUN split, unlike the single-space convention
          # elsewhere: a newline must separate words here, or line
          # boundaries would glue tokens together
-         .withColumn("_rs_words", F.filter(F.split(lower, _WS_CLASS),
+         .withColumn("_rs_words", F.filter(F.split(folded, _WS_CLASS),
                                            lambda w: w != ""))
          .withColumn("_rs_sorted", F.array_sort(F.col("_rs_words"))))
     lines, words = F.col("_rs_lines"), F.col("_rs_words")
@@ -262,9 +276,10 @@ def repetition_signals_sql(text_col: str = "text") -> dict[str, str]:
     ``_WS_CLASS`` so both regex dialects split identically). NULL
     comes out of the CASE guards for line-less / word-less docs,
     matching the Spark when() wrappers."""
-    lines = (f"list_filter(list_transform(string_split(lower({text_col}),"
+    folded = _lower_sql(text_col)
+    lines = (f"list_filter(list_transform(string_split({folded},"
              f" chr(10)), l -> trim(l)), l -> l != '')")
-    words = (f"list_filter(regexp_split_to_array(lower({text_col}),"
+    words = (f"list_filter(regexp_split_to_array({folded},"
              f" '{_WS_CLASS}'), w -> w != '')")
     top = (f"list_max(list_transform(list_distinct({words}),"
            f" d -> len(list_filter({words}, x -> x = d))))")

@@ -668,6 +668,64 @@ def test_repetition_signals_brute_force(spark):
                 assert g[k] == pytest.approx(rec[i]), (rec[0], k)
 
 
+def test_text_fold_cross_engine_on_awkward_text(spark):
+    """Every folding text operator and its DuckDB twin give equal
+    rows on text where Unicode lower() diverges across engines (Java
+    folds U+0130 to 'i'+U+0307 and a final capital sigma to U+03C2;
+    Python's str.lower agrees with Java), where java's \\s and RE2's
+    disagree (U+000B), and on NULL and shorter-than-n text."""
+    awkward = [
+        (1, "SPARK İstanbul spark merge"),     # dotted capital I
+        (2, "ΟΔΟΣ ΣΑΣ σας"),                   # final capital sigma
+        (3, "Straße STRASSE straße"),          # sharp s
+        (4, "a\x0bb  C"),                      # vertical tab
+        (5, "MiXeD Case ascii TEXT here"),     # mixed-case ASCII
+        (6, None),
+        (7, "ab"),                             # shorter than n
+    ]
+    df = spark.createDataFrame(awkward, "doc_id INT, text STRING")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(
+        awkward, columns=["doc_id", "text"]))
+    rep = X.repetition_signals_sql("text")
+    k = 16
+    mins = ", ".join(f"s{j}" for j in range(k))
+
+    def norm(rows):
+        return sorted(tuple(round(v, 9) if isinstance(v, float)
+                            else tuple(v) if isinstance(v, list) else v
+                            for v in r) for r in rows)
+
+    pairs = {
+        "word_grams": (
+            D.word_grams(df, "doc_id", "text", 3),
+            D.word_grams_sql(3)),
+        "minhash": (
+            D.minhash_signature(df, "text", num_hashes=k).select(
+                "doc_id", "minhash"),
+            f"WITH {D.minhash_sql_cte(num_hashes=k)} "
+            f"SELECT doc_id, [{mins}] FROM _ms"),
+        "simhash": (
+            D.simhash(df, "text").select("doc_id", "simhash"),
+            f"WITH {D.simhash_sql_cte()} SELECT doc_id, simhash FROM _sh"),
+        "fingerprint": (
+            X.fingerprint(df).select("doc_id", "fp"),
+            f"SELECT doc_id, {X.fingerprint_sql('text')} FROM documents"),
+        "repetition": (
+            X.repetition_signals(df).drop("text"),
+            f"SELECT doc_id, {rep['n_lines']}, {rep['dup_line_frac']},"
+            f" {rep['dup_word_frac']}, {rep['top_word_frac']}"
+            f" FROM documents"),
+    }
+    diffs = {}
+    for name, (sdf, sql) in pairs.items():
+        got = norm(tuple(r) for r in sdf.collect())
+        exp = norm(con.sql(sql).fetchall())
+        if got != exp:
+            diffs[name] = sorted(set(got) ^ set(exp), key=str)
+    assert not diffs, diffs
+
+
 def test_redact_pii_sequential_and_twin(spark):
     """Planted PII is scrubbed with exact counts; an email's digits
     never double-count as a phone; NULL stays NULL; the DuckDB twin
