@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .dedup import _PAIR_COS_SQL, _cos_hoist
+
 __all__ = ["cosine_topk", "fit_centroids", "assign_centroid",
            "ivf_topk", "quantize_embeddings", "quantized_cosine_topk",
            "QUANT_LAMBDA_SQL"]
@@ -55,35 +57,14 @@ QUANT_LAMBDA_SQL = ("CAST(floor(x * CAST(127 AS DOUBLE) / _mx"
                     " + CAST(0.5 AS DOUBLE)) AS INT)")
 
 
-def _cos_side(df: DataFrame, vec_col: str, out: str) -> DataFrame:
-    """Hoist the double cast + norm per ROW so the scoring stage folds
-    one dot product per (query, vector) pair instead of three — bit-
-    identical to the historical per-pair `dot/(na*nb)` expression
-    (same element promotions, same fold order, same division; see
-    dedup._cos_sides)."""
-    return (df.withColumn(
-                f"_n{out}",
-                F.expr(f"sqrt(aggregate({vec_col}, 0D, (acc, v) -> "
-                       f"acc + CAST(v AS DOUBLE) * v))"))
-            .withColumn(out, F.expr(
-                f"transform({vec_col}, x -> CAST(x AS DOUBLE))"))
-            .drop(vec_col))
-
-
-_PAIR_COS = ("aggregate(zip_with(_qv, _pv, (x, y) -> x * y), 0D, "
-             "(acc, v) -> acc + v) / (_n_qv * _n_pv)")
-
-
 def cosine_topk(queries: DataFrame, vectors: DataFrame, k: int,
                 query_id: str = "query_id", vec_id: str = "vec_id",
                 q_vec: str = "embedding", p_vec: str = "embedding") -> DataFrame:
     """Exact cosine top-k: (query_id, vec_id, cosine, rank)."""
-    q = _cos_side(queries.select(F.col(query_id),
-                                 F.col(q_vec).alias("_v")), "_v", "_qv")
-    p = _cos_side(vectors.select(F.col(vec_id),
-                                 F.col(p_vec).alias("_v")), "_v", "_pv")
+    q = _cos_hoist(queries, q_vec, "a", query_id)
+    p = _cos_hoist(vectors, p_vec, "b", vec_id)
     scored = (F.broadcast(q).crossJoin(p)
-              .withColumn("cosine", F.expr(_PAIR_COS)))
+              .withColumn("cosine", F.expr(_PAIR_COS_SQL)))
     w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
                                              F.col(vec_id).asc())
     return (scored.withColumn("rank", F.row_number().over(w))
@@ -178,11 +159,11 @@ def ivf_topk(queries: DataFrame, vectors: DataFrame, k: int,
          .withColumn("centroid_id", F.explode(probes(F.col("_qv")))))
     # hoist after the probe UDF (it reads the raw float arrays) —
     # the re-rank then folds one dot per candidate
-    q = _cos_side(q.withColumnRenamed("_qv", "_v"), "_v", "_qv")
-    vecs = _cos_side(vecs.withColumnRenamed("_pv", "_v"), "_v", "_pv")
+    q = _cos_hoist(q, "_qv", "a", query_id, "centroid_id")
+    vecs = _cos_hoist(vecs, "_pv", "b", vec_id, "centroid_id")
 
     cand = q.join(vecs, "centroid_id", "inner")
-    scored = cand.withColumn("cosine", F.expr(_PAIR_COS))
+    scored = cand.withColumn("cosine", F.expr(_PAIR_COS_SQL))
     w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
                                              F.col(vec_id).asc())
     return (scored.withColumn("rank", F.row_number().over(w))

@@ -34,7 +34,7 @@ __all__ = [
     "dedup_incremental_oracle_sql", "planted_content_sql",
     "exact_dedup", "exact_dedup_by_hash", "minhash_signature",
     "minhash_lsh_pairs", "minhash_dedup", "component_min_labels",
-    "minhash_sql_cte",
+    "cluster_dedup_from_pairs", "shared_hash_pairs", "minhash_sql_cte",
     "minhash_pairs_oracle_sql", "minhash_permutation_consts",
     "simhash", "simhash_pairs", "simhash_sql_cte",
     "ngram_jaccard_pairs", "word_grams", "word_grams_sql",
@@ -154,24 +154,29 @@ def minhash_sql_cte(id_col: str = "doc_id", text_col: str = "text",
                 GROUP BY {id_col})"""
 
 
-def minhash_band_predicate_sql(num_hashes: int = 64,
-                               bands: int = 16) -> str:
-    """SQL predicate over aliases a/b of the ``_ms`` signature
-    relation: true iff any band's signature slice is equal (the LSH
-    candidate condition)."""
+def minhash_pair_select_sql(id_col: str = "doc_id", num_hashes: int = 64,
+                            bands: int = 16, threshold: float = 0.6,
+                            with_est: bool = False) -> str:
+    """THE DuckDB spelling of the minhash LSH pair predicate: a SELECT
+    of ``(id_a, id_b)`` over aliases a/b of the ``_ms`` signature
+    relation, candidate = any band's signature slice equal, kept when
+    the estimate (matching positions / num_hashes) reaches
+    ``threshold``; ``with_est`` adds the estimate as ``est_jaccard``."""
     r = num_hashes // bands
-    return " OR ".join(
+    band_eq = " OR ".join(
         "(" + " AND ".join(f"a.s{band * r + j} = b.s{band * r + j}"
                            for j in range(r)) + ")"
         for band in range(bands))
-
-
-def minhash_match_count_sql(num_hashes: int = 64) -> str:
-    """SQL expression counting matching signature positions between
-    aliases a and b of ``_ms``."""
-    return "(" + " + ".join(
+    est = "(" + " + ".join(
         f"CASE WHEN a.s{k} = b.s{k} THEN 1 ELSE 0 END"
-        for k in range(num_hashes)) + ")"
+        for k in range(num_hashes)) + f") * 1.0 / {num_hashes}"
+    sel = f"SELECT a.{id_col} AS id_a, b.{id_col} AS id_b"
+    if with_est:
+        sel += f",\n               {est} AS est_jaccard"
+    return f"""{sel}
+        FROM _ms a JOIN _ms b
+          ON a.{id_col} < b.{id_col} AND ({band_eq})
+        WHERE {est} >= {threshold}"""
 
 
 def minhash_pairs_oracle_sql(id_col: str = "doc_id",
@@ -180,18 +185,11 @@ def minhash_pairs_oracle_sql(id_col: str = "doc_id",
                              num_hashes: int = 64, bands: int = 16,
                              shingle_n: int = 5,
                              threshold: float = 0.6) -> str:
-    """Full DuckDB twin of ``minhash_lsh_pairs(band_key='exact')``:
-    candidate = any band's signature slice equal; estimate = matching
-    signature positions / num_hashes."""
-    band_eq = minhash_band_predicate_sql(num_hashes, bands)
-    matches = minhash_match_count_sql(num_hashes)
+    """Full DuckDB twin of ``minhash_lsh_pairs(band_key='exact')``."""
     return f"""
         WITH {minhash_sql_cte(id_col, text_col, table, num_hashes, shingle_n)}
-        SELECT a.{id_col} AS id_a, b.{id_col} AS id_b,
-               {matches} * 1.0 / {num_hashes} AS est_jaccard
-        FROM _ms a JOIN _ms b
-          ON a.{id_col} < b.{id_col} AND ({band_eq})
-        WHERE {matches} * 1.0 / {num_hashes} >= {threshold}"""
+        {minhash_pair_select_sql(id_col, num_hashes, bands, threshold,
+                                 with_est=True)}"""
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -269,21 +267,65 @@ def minhash_dedup(df: DataFrame, id_col: str, text_col: str,
     component minimum (e.g. edges B-E and D-E with B < D < E keep
     both B and D).
 
-    ``connected=True``: iterative min-label propagation
-    (``component_min_labels``) keeps exactly one survivor — the global
-    minimum id — per connected component. O(component diameter)
-    Spark jobs; diameters of near-dup clusters are tiny in practice.
+    ``connected=True``: ``cluster_dedup_from_pairs`` keeps exactly one
+    survivor — the global minimum id — per connected component.
 
     Extra kwargs (bands, band_key, ...) pass through to
     ``minhash_lsh_pairs``."""
     pairs = minhash_lsh_pairs(df, id_col, text_col, threshold=threshold, **kw)
-    if not connected:
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        return df.join(losers, id_col, "left_anti")
-    labels = component_min_labels(pairs)
+    if connected:
+        return cluster_dedup_from_pairs(df, pairs, id_col)
+    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    return df.join(losers, id_col, "left_anti")
+
+
+def cluster_dedup_from_pairs(items: DataFrame, pairs: DataFrame,
+                             id_col: str, a_col: str = "id_a",
+                             b_col: str = "id_b") -> DataFrame:
+    """THE cluster collapse over any near-dup pair table: one survivor
+    — the minimum id — per connected component of the pair graph,
+    returning the surviving rows of ``items`` unchanged. Every
+    modality's cluster dedup (text minhash, image phash, embeddings,
+    video frames, audio windows) goes through here.
+
+    Scale posture: ``component_min_labels`` runs over near-dup volume
+    only (O(log component diameter) rounds, localCheckpoint-truncated);
+    the final left_anti join broadcasts the loser set when it fits
+    (losers are bounded by duplicate volume, not corpus volume), so
+    the payload bytes of ``items`` stay put."""
+    labels = component_min_labels(pairs.select(
+        F.col(a_col).alias("id_a"), F.col(b_col).alias("id_b")))
     losers = (labels.filter(F.col("rep") != F.col("id"))
               .select(F.col("id").alias(id_col)))
-    return df.join(losers, id_col, "left_anti")
+    return items.join(losers, id_col, "left_anti")
+
+
+def shared_hash_pairs(items: DataFrame, id_col: str, hash_col: str,
+                      min_shared: int, max_df: int | None,
+                      count_alias: str) -> DataFrame:
+    """Near-dup pairs over (id, content-hash) rows: distinct per item,
+    optional ``max_df`` document-frequency cap (drops degenerate
+    hashes shared by more than that many items — the n-gram max_df
+    candidate rule; the df filter side is small so Spark broadcasts
+    it), ids-only self-equi-join on the hash, and a per-pair
+    shared-count threshold. The bytes the hashes came from never enter
+    this plan — callers hash in their map stage. Backs video (frame
+    phash), audio (window fingerprint) and winnowing dedup."""
+    a_id, b_id = f"{id_col}_a", f"{id_col}_b"
+    items = items.select(id_col, hash_col).distinct()
+    if max_df is not None:
+        df_ok = (items.groupBy(hash_col)
+                 .agg(F.count(F.lit(1)).alias("_df"))
+                 .filter(F.col("_df") <= max_df)
+                 .select(hash_col))
+        items = items.join(df_ok, hash_col)
+    a = items.select(F.col(id_col).alias(a_id), hash_col)
+    b = items.select(F.col(id_col).alias(b_id), hash_col)
+    return (a.join(b, hash_col)
+            .filter(F.col(a_id) < F.col(b_id))
+            .groupBy(a_id, b_id)
+            .agg(F.count(F.lit(1)).alias(count_alias))
+            .filter(F.col(count_alias) >= min_shared))
 
 
 def component_min_labels(pairs: DataFrame, max_iter: int = 200) -> DataFrame:
@@ -350,23 +392,13 @@ def component_min_labels(pairs: DataFrame, max_iter: int = 200) -> DataFrame:
         "(pathological chain — raise max_iter)")
 
 
-def components_sql_cte(id_col: str = "doc_id",
-                       num_hashes: int = 64, bands: int = 16,
-                       threshold: float = 0.6) -> str:
-    """THE one SQL spelling of the LSH-pair connected-components
-    closure (same discipline as ``hash_u60_sql``/``split_case_sql``):
-    CTE fragments ``_pairs``/``_und``/``_reach``/``_rep`` over an
-    in-scope ``_ms`` signature relation, yielding ``_rep(id, rep)``
-    with rep = the minimum reachable id. Callers must open WITH
-    RECURSIVE and include ``minhash_sql_cte`` first."""
-    band_eq = minhash_band_predicate_sql(num_hashes, bands)
-    matches = minhash_match_count_sql(num_hashes)
+def components_sql_cte(id_col: str = "doc_id") -> str:
+    """THE one SQL spelling of the connected-components closure (same
+    discipline as ``hash_u60_sql``/``split_case_sql``): CTE fragments
+    ``_und``/``_reach``/``_rep`` over an in-scope ``_pairs(id_a,
+    id_b)`` relation, yielding ``_rep(id_col, rep)`` with rep = the
+    minimum reachable id. Callers must open WITH RECURSIVE."""
     return f"""
-        _pairs AS (
-            SELECT a.{id_col} AS id_a, b.{id_col} AS id_b
-            FROM _ms a JOIN _ms b
-              ON a.{id_col} < b.{id_col} AND ({band_eq})
-            WHERE {matches} * 1.0 / {num_hashes} >= {threshold}),
         _und AS (SELECT id_a, id_b FROM _pairs
                  UNION ALL
                  SELECT id_b, id_a FROM _pairs),
@@ -379,6 +411,35 @@ def components_sql_cte(id_col: str = "doc_id",
                  FROM _reach GROUP BY src)"""
 
 
+def dedup_survivors_sql(id_col: str, table: str,
+                        losers: str | None = None) -> str:
+    """THE survivor tail of the dedup twins: CTE ``_losers`` from the
+    ``losers`` SELECT (default: every non-minimum member of a
+    ``components_sql_cte`` component), then the ids of ``table`` with
+    no loser — NOT EXISTS, never NOT IN."""
+    if losers is None:
+        losers = f"SELECT {id_col} FROM _rep WHERE rep <> {id_col}"
+    return f"""_losers AS ({losers})
+        SELECT t.{id_col} FROM {table} t
+        WHERE NOT EXISTS (SELECT 1 FROM _losers l
+                          WHERE l.{id_col} = t.{id_col})
+        ORDER BY t.{id_col}"""
+
+
+def _minhash_components_sql(id_col: str, text_col: str, table: str,
+                            num_hashes: int, bands: int, shingle_n: int,
+                            threshold: float) -> str:
+    """WITH RECURSIVE head shared by the minhash closure twins: the
+    signature CTEs, the LSH ``_pairs`` and their ``_rep`` closure."""
+    return f"""
+        WITH RECURSIVE
+        {minhash_sql_cte(id_col, text_col, table, num_hashes,
+                         shingle_n).lstrip()},
+        _pairs AS ({minhash_pair_select_sql(id_col, num_hashes, bands,
+                                            threshold)}),
+        {components_sql_cte(id_col).lstrip()}"""
+
+
 def minhash_cluster_dedup_oracle_sql(id_col: str = "doc_id",
                                      text_col: str = "text",
                                      table: str = "documents",
@@ -388,18 +449,11 @@ def minhash_cluster_dedup_oracle_sql(id_col: str = "doc_id",
                                      threshold: float = 0.6) -> str:
     """DuckDB twin of ``minhash_dedup(connected=True)``: surviving ids
     after removing every non-minimum member of each connected
-    component, computed via the shared recursive-CTE closure."""
-    return f"""
-        WITH RECURSIVE
-        {minhash_sql_cte(id_col, text_col, table, num_hashes,
-                         shingle_n).lstrip()},
-        {components_sql_cte(id_col, num_hashes, bands,
-                            threshold).lstrip()},
-        _losers AS (SELECT {id_col} FROM _rep WHERE rep <> {id_col})
-        SELECT t.{id_col} FROM {table} t
-        WHERE NOT EXISTS (SELECT 1 FROM _losers l
-                          WHERE l.{id_col} = t.{id_col})
-        ORDER BY t.{id_col}"""
+    component."""
+    return f"""{_minhash_components_sql(id_col, text_col, table,
+                                        num_hashes, bands, shingle_n,
+                                        threshold)},
+        {dedup_survivors_sql(id_col, table)}"""
 
 
 def leakage_safe_split_oracle_sql(id_col: str = "doc_id",
@@ -421,12 +475,9 @@ def leakage_safe_split_oracle_sql(id_col: str = "doc_id",
     Spark's when-chain (a NULL id yields a NULL label in both
     engines)."""
     from .sample import hash_u60_sql, split_case_sql
-    return f"""
-        WITH RECURSIVE
-        {minhash_sql_cte(id_col, text_col, table, num_hashes,
-                         shingle_n).lstrip()},
-        {components_sql_cte(id_col, num_hashes, bands,
-                            threshold).lstrip()},
+    return f"""{_minhash_components_sql(id_col, text_col, table,
+                                        num_hashes, bands, shingle_n,
+                                        threshold)},
         _h AS (SELECT t.{id_col},
                       {hash_u60_sql(
                           f'CAST(coalesce(r.rep, t.{id_col})'
@@ -651,53 +702,43 @@ def _block_lsh_chunks(hashed: DataFrame, id_col: str, hash_col: str,
                        acc.alias("chunk"))
 
 
-def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
-                  max_hamming: int = 3,
-                  blocks: int | None = None) -> DataFrame:
-    """Near-dup pairs by SimHash block LSH: split the 60-bit hash into
-    ``blocks`` chunks; pairs within hamming distance < blocks share at
-    least one exact chunk (pigeonhole), so candidate gen is an
-    equi-join on (block_idx, chunk) AND — for max_hamming < blocks —
-    provably lossless: the output equals the brute-force all-pairs
-    hamming filter, which is what the SQL oracle computes. Verified
-    with exact popcount.
-
-    ``blocks=None`` (default) picks a lossless plan via
-    ``_multi_index_plan``: the classic one-block-per-key split while a
-    block stays >= 15 bits (max_hamming=3 -> 4 x 15-bit keys), and the
-    Manku C(m, r) multi-index at higher budgets where single blocks
-    would collapse to a handful of bits and buckets would go quadratic
-    at scale. Passing an explicit ``blocks`` keeps the plain split
-    with that count — narrower keys, caller owns the trade (and the
-    recall loss when blocks <= max_hamming)."""
-    hashed = simhash(df.select(id_col, text_col), text_col)
-    if blocks is None:
-        chunks = _block_lsh_chunks(hashed, id_col, "simhash",
-                                   SIMHASH_BITS, max_hamming)
-    else:
-        width = SIMHASH_BITS // blocks
-        mask = (1 << width) - 1
-        chunks = hashed.select(
-            id_col, "simhash",
-            F.posexplode(F.array(*[
-                (F.shiftrightunsigned("simhash", i * width)
-                 .bitwiseAND(F.lit(mask))).alias(f"c{i}")
-                for i in range(blocks)
-            ])).alias("block_idx", "chunk"))
+def _hamming_pairs(hashed: DataFrame, id_col: str, hash_col: str,
+                   total_bits: int, max_hamming: int) -> DataFrame:
+    """THE hamming pair join: ``(id_a, id_b, hamming)`` for every pair
+    of ``hashed`` rows whose ``total_bits``-bit hashes differ in at
+    most ``max_hamming`` bits, id_a < id_b. Candidates are the
+    equi-join of ``_block_lsh_chunks`` on (block_idx, chunk), which is
+    lossless (generalized pigeonhole), so the output equals the
+    brute-force all-pairs popcount filter the SQL twins compute; each
+    candidate is verified with an exact ``bit_count``."""
+    chunks = _block_lsh_chunks(hashed, id_col, hash_col, total_bits,
+                               max_hamming)
     a = chunks.select(F.col(id_col).alias("id_a"),
-                      F.col("simhash").alias("h_a"), "block_idx", "chunk")
+                      F.col(hash_col).alias("h_a"), "block_idx", "chunk")
     b = chunks.select(F.col(id_col).alias("id_b"),
-                      F.col("simhash").alias("h_b"), "block_idx", "chunk")
+                      F.col(hash_col).alias("h_b"), "block_idx", "chunk")
     # shuffle-hash, never broadcast: the multi-index fan-out makes the
     # chunk table C(m, r) x rows — the size estimator (which keeps the
     # pre-explode estimate) would otherwise try to broadcast it
-    pairs = (a.hint("shuffle_hash").join(b, ["block_idx", "chunk"])
-             .filter(F.col("id_a") < F.col("id_b"))
-             .dropDuplicates(["id_a", "id_b"]))
-    return (pairs
-            .withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
+    return (a.hint("shuffle_hash").join(b, ["block_idx", "chunk"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .dropDuplicates(["id_a", "id_b"])
+            .withColumn("hamming",
+                        F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
             .filter(F.col("hamming") <= max_hamming)
             .select("id_a", "id_b", "hamming"))
+
+
+def simhash_pairs(df: DataFrame, id_col: str, text_col: str,
+                  max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs by 60-bit SimHash within ``max_hamming`` bits
+    (``_hamming_pairs``). The default budget keeps the classic
+    4 x 15-bit block split; higher budgets use the Manku C(m, r)
+    multi-index, so keys stay >= 15 bits wide and buckets do not go
+    quadratic at scale."""
+    hashed = simhash(df.select(id_col, text_col), text_col)
+    return _hamming_pairs(hashed, id_col, "simhash", SIMHASH_BITS,
+                          max_hamming)
 
 
 # -------------------------------------------------------- ngram jaccard
@@ -953,17 +994,17 @@ _PAIR_COS_SQL = ("aggregate(zip_with(v_a, v_b, (x, y) -> x * y), 0D, "
                  "(acc, v) -> acc + v) / (n_a * n_b)")
 
 
-def _cos_sides(df: DataFrame, id_col: str,
-               vec_col: str) -> tuple[DataFrame, DataFrame]:
-    """The two sides of a cosine pair join, each carrying
-    (id, double-cast vector, norm) so the pair stage folds one dot
-    product and one multiply-divide per pair."""
-    def side(suffix: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(f"id_{suffix}"),
-            F.expr(_DCAST_SQL.format(v=vec_col)).alias(f"v_{suffix}"),
-            F.expr(_NORM_SQL.format(v=vec_col)).alias(f"n_{suffix}"))
-    return side("a"), side("b")
+def _cos_hoist(df: DataFrame, vec_col: str, side: str,
+               *keep) -> DataFrame:
+    """One side of a cosine pair stage: the ``keep`` columns plus the
+    double-cast vector ``v_{side}`` and its norm ``n_{side}``, so
+    ``_PAIR_COS_SQL`` over sides a and b folds one dot product and one
+    multiply-divide per pair. The dedup pair joins and the ANN top-k
+    scorers all hoist through here."""
+    return df.select(
+        *keep,
+        F.expr(_DCAST_SQL.format(v=vec_col)).alias(f"v_{side}"),
+        F.expr(_NORM_SQL.format(v=vec_col)).alias(f"n_{side}"))
 
 
 def cosine_pairs(df: DataFrame, id_col: str, vec_col: str,
@@ -972,9 +1013,10 @@ def cosine_pairs(df: DataFrame, id_col: str, vec_col: str,
     only (JVM-side, SQL-oracle-able). Quadratic in rows: intended for
     bounded sets or as the post-LSH verification stage; the scale path
     is ``embedding_near_dup`` (random-hyperplane LSH candidate gen).
-    Norms and double casts are per-row (``_cos_sides``), so the
+    Norms and double casts are per-row (``_cos_hoist``), so the
     quadratic stage is one fold per pair."""
-    a, b = _cos_sides(df, id_col, vec_col)
+    a, b = (_cos_hoist(df, vec_col, s, F.col(id_col).alias(f"id_{s}"))
+            for s in "ab")
     return (F.broadcast(a).crossJoin(b)
             .filter(F.col("id_a") < F.col("id_b"))
             .withColumn("cosine", F.expr(_PAIR_COS_SQL))
@@ -1030,10 +1072,11 @@ def embedding_near_dup(df: DataFrame, id_col: str, vec_col: str,
              .select("id_a", "id_b")
              .dropDuplicates(["id_a", "id_b"]))
 
-    # double-cast + norm hoisted per row (`_cos_sides`): an
+    # double-cast + norm hoisted per row (`_cos_hoist`): an
     # array<float> column would otherwise accumulate at float32 and
     # disagree with the exact path at the threshold boundary
-    va, vb = _cos_sides(slim, id_col, vec_col)
+    va, vb = (_cos_hoist(slim, vec_col, s, F.col(id_col).alias(f"id_{s}"))
+              for s in "ab")
     return (pairs.join(va, "id_a").join(vb, "id_b")
             .withColumn("cosine", F.expr(_PAIR_COS_SQL))
             .filter(F.col("cosine") >= threshold)
@@ -1068,39 +1111,15 @@ def crossmodal_near_dup(images: DataFrame, id_col: str = "image_id",
 
 
 def phash_near_dup(images: DataFrame, id_col: str = "image_id",
-                   phash_col: str = "phash", max_hamming: int = 6,
-                   blocks: int | None = None) -> DataFrame:
-    """Image near-dup via perceptual-hash block LSH + exact hamming —
-    same pigeonhole machinery as simhash_pairs, over the precomputed
-    phash column of the image table. ``blocks=None`` picks the
-    lossless plan via ``_multi_index_plan`` — at ``max_hamming=8``
-    over 64 bits that is the C(11, 3) multi-index with >= 16-bit
+                   phash_col: str = "phash",
+                   max_hamming: int = 6) -> DataFrame:
+    """Image near-dup pairs by the precomputed 64-bit perceptual hash
+    within ``max_hamming`` bits (``_hamming_pairs``) — at
+    ``max_hamming=8`` that is the C(11, 3) multi-index with >= 16-bit
     concatenated keys, not 16 x 4-bit blocks whose ~N/16-row buckets
     self-join quadratically at 10^9+ images."""
-    if blocks is None:
-        chunks = _block_lsh_chunks(images.select(id_col, phash_col),
-                                   id_col, phash_col, 64, max_hamming)
-    else:
-        width = 64 // blocks
-        mask = (1 << width) - 1
-        chunks = images.select(
-            id_col, phash_col,
-            F.posexplode(F.array(*[
-                (F.shiftrightunsigned(phash_col, i * width)
-                 .bitwiseAND(F.lit(mask)))
-                for i in range(blocks)
-            ])).alias("block_idx", "chunk"))
-    a = chunks.select(F.col(id_col).alias("id_a"),
-                      F.col(phash_col).alias("h_a"), "block_idx", "chunk")
-    b = chunks.select(F.col(id_col).alias("id_b"),
-                      F.col(phash_col).alias("h_b"), "block_idx", "chunk")
-    # shuffle-hash, never broadcast (see simhash_pairs)
-    return (a.hint("shuffle_hash").join(b, ["block_idx", "chunk"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-            .withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming"))
+    return _hamming_pairs(images.select(id_col, phash_col), id_col,
+                          phash_col, 64, max_hamming)
 
 
 def embedding_cluster_dedup(df: DataFrame, id_col: str = "vec_id",
@@ -1132,10 +1151,7 @@ def embedding_cluster_dedup(df: DataFrame, id_col: str = "vec_id",
                                    **lsh_kw)
     else:
         raise ValueError("method must be 'exact' or 'lsh'")
-    labels = component_min_labels(pairs)
-    losers = (labels.filter(F.col("rep") != F.col("id"))
-              .select(F.col("id").alias(id_col)))
-    return df.join(losers, id_col, "left_anti")
+    return cluster_dedup_from_pairs(df, pairs, id_col)
 
 
 def embedding_cluster_dedup_oracle_sql(id_col: str = "vec_id",
@@ -1144,9 +1160,8 @@ def embedding_cluster_dedup_oracle_sql(id_col: str = "vec_id",
                                        threshold: float = 0.95) -> str:
     """DuckDB twin of ``embedding_cluster_dedup(method='exact')``:
     the exact cosine pair graph (same derivation as the driver-proven
-    ``emb_near_dup`` twin) closed transitively by the same
-    recursive-CTE shape as ``components_sql_cte``, min-id survivors
-    kept via NOT EXISTS (never NOT IN)."""
+    ``emb_near_dup`` twin) closed by ``components_sql_cte``, min-id
+    survivors kept by ``dedup_survivors_sql``."""
     cos = (f"list_cosine_similarity(CAST(a.{vec_col} AS DOUBLE[]), "
            f"CAST(b.{vec_col} AS DOUBLE[]))")
     return f"""
@@ -1156,25 +1171,13 @@ def embedding_cluster_dedup_oracle_sql(id_col: str = "vec_id",
             FROM {table} a JOIN {table} b
               ON a.{id_col} < b.{id_col}
             WHERE {cos} >= {threshold}),
-        _und AS (SELECT id_a, id_b FROM _pairs
-                 UNION ALL
-                 SELECT id_b, id_a FROM _pairs),
-        _reach(src, dst) AS (
-            SELECT id_a, id_a FROM _und GROUP BY id_a
-            UNION
-            SELECT r.src, u.id_b FROM _reach r
-            JOIN _und u ON r.dst = u.id_a),
-        _rep AS (SELECT src AS {id_col}, min(dst) AS rep
-                 FROM _reach GROUP BY src),
-        _losers AS (SELECT {id_col} FROM _rep WHERE rep <> {id_col})
-        SELECT t.{id_col} FROM {table} t
-        WHERE NOT EXISTS (SELECT 1 FROM _losers l
-                          WHERE l.{id_col} = t.{id_col})"""
+        {components_sql_cte(id_col).lstrip()},
+        {dedup_survivors_sql(id_col, table)}"""
 
 
 def phash_cluster_dedup(images: DataFrame, id_col: str = "image_id",
-                        phash_col: str = "phash", max_hamming: int = 6,
-                        blocks: int | None = None) -> DataFrame:
+                        phash_col: str = "phash",
+                        max_hamming: int = 6) -> DataFrame:
     """Image cluster dedup: one survivor — the minimum id — per
     connected component of the ``phash_near_dup`` pair graph (same
     posture as ``minhash_dedup(connected=True)`` on the text side;
@@ -1183,11 +1186,8 @@ def phash_cluster_dedup(images: DataFrame, id_col: str = "image_id",
     edges). Candidate gen is the lossless block-LSH, so the survivor
     set is exact for the hamming threshold. Returns the surviving rows
     of ``images`` unchanged."""
-    pairs = phash_near_dup(images, id_col, phash_col, max_hamming, blocks)
-    labels = component_min_labels(pairs)
-    losers = (labels.filter(F.col("rep") != F.col("id"))
-              .select(F.col("id").alias(id_col)))
-    return images.join(losers, id_col, "left_anti")
+    pairs = phash_near_dup(images, id_col, phash_col, max_hamming)
+    return cluster_dedup_from_pairs(images, pairs, id_col)
 
 
 def cluster_size_histogram(df: DataFrame, id_col: str, text_col: str,
@@ -1232,12 +1232,9 @@ def cluster_size_histogram_oracle_sql(id_col: str = "doc_id",
     """DuckDB twin of ``cluster_size_histogram``: component sizes via
     the shared recursive-CTE closure, singletons via the
     total-minus-labeled difference."""
-    return f"""
-        WITH RECURSIVE
-        {minhash_sql_cte(id_col, text_col, table, num_hashes,
-                         shingle_n).lstrip()},
-        {components_sql_cte(id_col, num_hashes, bands,
-                            threshold).lstrip()},
+    return f"""{_minhash_components_sql(id_col, text_col, table,
+                                        num_hashes, bands, shingle_n,
+                                        threshold)},
         _sizes AS (SELECT rep, count(*) AS cluster_size
                    FROM _rep GROUP BY rep),
         _hist AS (SELECT cluster_size, count(*) AS n_clusters

@@ -34,11 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..kernels.image import decode_image, encode_image, psnr, average_phash
+from .dedup import cluster_dedup_from_pairs, shared_hash_pairs
 
 __all__ = ["decode_stats", "verify_images", "resize_images",
            "image_quality_stats", "frame_sample", "video_near_dup",
            "audio_stats", "audio_fingerprints", "audio_near_dup",
-           "shared_hash_pairs", "cluster_dedup_from_pairs",
            "video_cluster_dedup", "audio_cluster_dedup"]
 
 _STATS_SCHEMA = T.StructType([
@@ -341,34 +341,6 @@ def audio_stats(audios: DataFrame) -> DataFrame:
             .mapInPandas(run, schema=_AUDIO_SCHEMA))
 
 
-def shared_hash_pairs(items: DataFrame, id_col: str, hash_col: str,
-                      min_shared: int, max_df: int | None,
-                      count_alias: str) -> DataFrame:
-    """Generic near-dup pair machinery over (id, content-hash) rows:
-    distinct per item, optional ``max_df`` document-frequency cap
-    (drops degenerate hashes shared by more than that many items —
-    the n-gram max_df candidate rule; the df filter side is small so
-    Spark broadcasts it), ids-only self-equi-join on the hash, and a
-    per-pair shared-count threshold. The bytes the hashes came from
-    never enter this plan — callers hash in their map stage. Backs
-    both video (frame phash) and audio (window fingerprint) dedup."""
-    a_id, b_id = f"{id_col}_a", f"{id_col}_b"
-    items = items.select(id_col, hash_col).distinct()
-    if max_df is not None:
-        df_ok = (items.groupBy(hash_col)
-                 .agg(F.count(F.lit(1)).alias("_df"))
-                 .filter(F.col("_df") <= max_df)
-                 .select(hash_col))
-        items = items.join(df_ok, hash_col)
-    a = items.select(F.col(id_col).alias(a_id), hash_col)
-    b = items.select(F.col(id_col).alias(b_id), hash_col)
-    return (a.join(b, hash_col)
-            .filter(F.col(a_id) < F.col(b_id))
-            .groupBy(a_id, b_id)
-            .agg(F.count(F.lit(1)).alias(count_alias))
-            .filter(F.col(count_alias) >= min_shared))
-
-
 _AFP_SCHEMA = T.StructType([
     T.StructField("audio_id", T.StringType()),
     T.StructField("ok", T.BooleanType()),
@@ -468,32 +440,6 @@ def audio_near_dup(audios: DataFrame, min_shared: int = 2,
                               min_shared, max_df, "n_shared_windows")
             .withColumnRenamed("audio_id_a", "audio_a")
             .withColumnRenamed("audio_id_b", "audio_b"))
-
-
-def cluster_dedup_from_pairs(items: DataFrame, pairs: DataFrame,
-                             id_col: str, a_col: str,
-                             b_col: str) -> DataFrame:
-    """Generic cluster collapse over ANY near-dup pair table: one
-    survivor — the minimum id — per connected component of the pair
-    graph, returning the surviving rows of ``items`` unchanged. The
-    same posture as ``phash_cluster_dedup`` / ``minhash_dedup(
-    connected=True)``, factored out so every modality's pair generator
-    (video frame phash, audio window fingerprints, cross-modal
-    consensus) gets chained-burst collapse without re-deriving the
-    component logic.
-
-    Scale posture: ``component_min_labels`` runs over near-dup volume
-    only (O(component diameter) rounds, localCheckpoint-truncated);
-    the final left_anti join broadcasts the loser set when it fits
-    (losers are bounded by duplicate volume, not corpus volume), so
-    the payload bytes of ``items`` stay put."""
-    from .dedup import component_min_labels
-    edges = pairs.select(F.col(a_col).alias("id_a"),
-                         F.col(b_col).alias("id_b"))
-    labels = component_min_labels(edges)
-    losers = (labels.filter(F.col("rep") != F.col("id"))
-              .select(F.col("id").alias(id_col)))
-    return items.join(losers, id_col, "left_anti")
 
 
 def video_cluster_dedup(videos: DataFrame, every_n: int = 1,

@@ -92,8 +92,6 @@ def clean_corpus_oracle_sql(id_col: str = "doc_id",
     """DuckDB twin of ``clean_corpus(band_key='exact')``: returns the
     surviving id set."""
     quality = X.quality_score_sql(text_col)["quality"]
-    band_eq = D.minhash_band_predicate_sql(num_hashes, bands)
-    matches = D.minhash_match_count_sql(num_hashes)
     return f"""
         WITH _qual AS (
             SELECT {id_col}, {text_col} FROM {table}
@@ -103,15 +101,11 @@ def clean_corpus_oracle_sql(id_col: str = "doc_id",
         _exd AS (SELECT q.* FROM _qual q JOIN _exid USING ({id_col})),
         {D.minhash_sql_cte(id_col, text_col, '_exd', num_hashes,
                            shingle_n)},
-        _losers AS (
-            SELECT DISTINCT b.{id_col} AS {id_col}
-            FROM _ms a JOIN _ms b
-              ON a.{id_col} < b.{id_col} AND ({band_eq})
-            WHERE {matches} * 1.0 / {num_hashes} >= {jaccard_threshold})
-        SELECT t.{id_col} FROM _exd t
-        WHERE NOT EXISTS (SELECT 1 FROM _losers l
-                          WHERE l.{id_col} = t.{id_col})
-        ORDER BY t.{id_col}"""
+        _pairs AS ({D.minhash_pair_select_sql(id_col, num_hashes, bands,
+                                              jaccard_threshold)}),
+        {D.dedup_survivors_sql(
+            id_col, '_exd',
+            f"SELECT DISTINCT id_b AS {id_col} FROM _pairs")}"""
 
 
 def govern_corpus(docs: DataFrame, eval_df: DataFrame,

@@ -39,11 +39,9 @@ Cross-engine hardening (round-5 review findings):
   to 'i'+U+0307 in Java — an extra symbol token). translate() has
   identical 1:1 semantics in both engines, and query terms are
   ASCII-only anyway.
-- The tokenizer uses an explicit whitespace class, not ``\\s`` (Java
-  includes U+000B in ``\\s``, RE2 does not — the CLAUDE.md shared
-  regex subset). ``text._TOKEN_RE``'s ``\\s`` spelling is
-  grandfathered for the never-lowered token_count twin; new twins
-  comply.
+- The tokenizer is ``text._TOKEN_RE``, whose whitespace class is
+  explicit (Java includes U+000B in ``\\s``, RE2 does not — the
+  CLAUDE.md shared regex subset).
 - Float constants are spelled ``CAST(x AS DOUBLE)``: bare decimal
   literals parse as DECIMAL in BOTH engines and Spark then performs
   decimal (not IEEE) arithmetic — the same trap ``rrf_weight_sql``
@@ -57,15 +55,10 @@ import re
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import _lower_sql, _spark_re
+from .text import _TOKEN_RE, _lower_sql, _spark_re
 
 __all__ = ["bm25_topk", "bm25_topk_oracle_sql", "rrf_fuse",
            "rrf_weight_sql"]
-
-# Explicit whitespace class (shared Java/RE2 subset — see module doc);
-# otherwise the same letter-run / digit-run / symbol tokenizer as
-# text._TOKEN_RE.
-_BM25_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\f\r]"
 
 # terms must be tokens the tokenizer can actually emit: a pure letter
 # run or a pure digit run (a mixed 'gpt4' string would tokenize as
@@ -99,7 +92,7 @@ def toks_expr(text_col: str) -> str:
     (operators/lm.py) and BPE (operators/bpe.py) so their word
     universes can never drift apart."""
     return (f"filter(regexp_extract_all({_lower_sql(text_col)}, "
-            f"'{_spark_re(_BM25_TOKEN_RE)}', 0), x -> x != '')")
+            f"'{_spark_re(_TOKEN_RE)}', 0), x -> x != '')")
 
 
 def toks_duck_sql(text_col: str) -> str:
@@ -107,7 +100,7 @@ def toks_duck_sql(text_col: str) -> str:
     matches, so no filter; backslashes are not unescaped in its
     string literals, so the raw regex embeds directly)."""
     return (f"regexp_extract_all({_lower_sql(text_col)}, "
-            f"'{_BM25_TOKEN_RE}')")
+            f"'{_TOKEN_RE}')")
 
 
 def _stats_fold_sql(text_col: str, terms: list[str]) -> str:

@@ -25,9 +25,10 @@ __all__ = [
 
 # ---------------------------------------------------------------- tokens
 
-# whitespace tokens plus a BPE-ish fallback: runs of letters, runs of
-# digits, or single non-space symbols
-_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+# THE token regex (token_count and the bm25 / LM / BPE token arrays):
+# runs of letters, runs of digits, or single non-space symbols. The
+# whitespace class is explicit: java's \s includes U+000B, RE2's not
+_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\f\r]"
 
 
 def _spark_re(pat: str) -> str:
@@ -64,6 +65,25 @@ def token_count_sql(text_col: str = "text") -> str:
     return (f"CAST(len(regexp_extract_all({text_col}, '{_TOKEN_RE}')) AS BIGINT)")
 
 
+# a word is a maximal [A-Za-z0-9_] run, i.e. what ASCII word boundaries
+# delimit; both engines split on its complement. A boundary escape
+# would be Unicode-aware in Java and ASCII in RE2 ('éthe' has a word
+# 'the' in RE2 only)
+_NON_WORD = "[^A-Za-z0-9_]+"
+
+
+def _word_hits_sql(text_col: str, words: list[str],
+                   duck: bool = False) -> str:
+    """Count of the words of the ``_lower_sql``-folded text that are in
+    ``words``: the Spark spelling, or the DuckDB twin with ``duck``.
+    Callers guard NULL text (Spark's size(NULL) is not NULL)."""
+    split = "regexp_split_to_array" if duck else "split"
+    toks = f"{split}({_lower_sql(text_col)}, '{_NON_WORD}')"
+    hits = f"w -> w IN ({', '.join(repr(w) for w in words)})"
+    return (f"len(list_filter({toks}, {hits}))" if duck
+            else f"size(filter({toks}, {hits}))")
+
+
 # --------------------------------------------------------------- quality
 
 _STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
@@ -86,9 +106,8 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.expr(f"filter(split({text_col}, ' '), w -> w != '')")))
     punct = (F.length(text_col)
              - F.length(F.regexp_replace(text_col, r"[\.,;:!\?'\"]", "")))
-    stop_pat = "(?i)\\b(" + "|".join(_STOPWORDS) + ")\\b"
-    stops = F.when(F.col(text_col).isNotNull(), F.size(F.expr(
-        f"regexp_extract_all({text_col}, '{_spark_re(stop_pat)}', 0)")))
+    stops = F.when(F.col(text_col).isNotNull(),
+                   F.expr(_word_hits_sql(text_col, _STOPWORDS)))
     # the quality points test the RAW ratios, exactly as the SQL twin
     # does — testing the rounded output columns would disagree with it
     # when a true ratio rounds across a 0.1 / 0.01 / 0.7 boundary
@@ -111,8 +130,7 @@ def quality_score_sql(text_col: str = "text") -> dict[str, str]:
     words = f"len(list_filter(string_split({text_col}, ' '), w -> w != ''))"
     punct = (f"(length({text_col}) - length(regexp_replace({text_col},"
              f" '[\\.,;:!\\?''\"]', '', 'g')))")
-    stop_pat = "(?i)\\b(" + "|".join(_STOPWORDS) + ")\\b"
-    stops = f"len(regexp_extract_all({text_col}, '{stop_pat}'))"
+    stops = _word_hits_sql(text_col, _STOPWORDS, duck=True)
     return {
         "n_chars_t": f"CAST(length({text_col}) AS BIGINT)",
         "n_words": f"CAST({words} AS BIGINT)",
@@ -137,17 +155,13 @@ _LANG_MARKERS = {
 }
 
 
-def _marker_count(text_col: str, lang: str):
-    pat = "(?i)\\b(" + "|".join(_LANG_MARKERS[lang]) + ")\\b"
-    return F.size(F.expr(f"regexp_extract_all({text_col}, '{_spark_re(pat)}', 0)"))
-
-
 def language_id(df: DataFrame, text_col: str = "text",
                 out: str = "lang_pred") -> DataFrame:
     """Marker-word language ID. Deterministic argmax with fixed
     language order (en > de > fr > es on ties); 'und' if no marker."""
     langs = list(_LANG_MARKERS)
-    counts = [_marker_count(text_col, lang) for lang in langs]
+    counts = [F.expr(_word_hits_sql(text_col, _LANG_MARKERS[lang]))
+              for lang in langs]
     best = F.greatest(*counts)
     # NULL text -> NULL prediction (the SQL CASE yields NULL too);
     # without the guard size(NULL) = -1 would classify NULL as 'und'
@@ -160,11 +174,8 @@ def language_id(df: DataFrame, text_col: str = "text",
 
 def language_id_sql(text_col: str = "text") -> str:
     langs = list(_LANG_MARKERS)
-    counts = {
-        lang: (f"len(regexp_extract_all({text_col}, "
-               f"'(?i)\\b({'|'.join(_LANG_MARKERS[lang])})\\b'))")
-        for lang in langs
-    }
+    counts = {lang: _word_hits_sql(text_col, _LANG_MARKERS[lang], duck=True)
+              for lang in langs}
     best = "greatest(" + ", ".join(counts.values()) + ")"
     case = f"CASE WHEN {best} <= 0 THEN 'und'"
     for lang in langs:
@@ -434,7 +445,7 @@ def normalize_text_sql(text_col: str = "text",
 # ------------------------------------------------------------------ PII
 
 # shared Java-regex / RE2 syntax only: no lookaround, explicit classes,
-# and NO \b — the two dialects disagree on word boundaries next to
+# and NO word-boundary escape — the two dialects disagree on word boundaries next to
 # non-ASCII letters (Java's boundary is Unicode-aware, RE2's is ASCII),
 # so 'ü555-1234' would redact in one engine and not the other.
 # Boundary-free patterns over-match digit blobs instead of

@@ -26,7 +26,7 @@ LET-BOUND as a lambda variable (``transform(array(grams), _wg ->
 projected column is NOT safe — CollapseProject re-inlines the alias
 into every window reference and the hashing goes quadratic in
 document length. Overlap detection then reuses the generic ids-only
-``shared_hash_pairs`` engine (the video/audio dedup machinery): the
+``dedup.shared_hash_pairs`` engine (as video/audio dedup do): the
 text never outlives its map stage, and every exchange after the
 explode carries fixed-width ``(id, int64)`` rows.
 """
@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import shared_hash_pairs
 from .sample import _qcol, _qident, hash_u60_expr, hash_u60_sql
 
 __all__ = ["winnow_fingerprints", "winnow_overlap_pairs",
@@ -97,7 +98,6 @@ def winnow_overlap_pairs(df: DataFrame, id_col: str,
     corpus-hot fingerprints (the ubiquitous-boilerplate cap) before
     the ids-only self-join; output is ``(id_a, id_b,
     n_shared_fps)``."""
-    from .multimodal import shared_hash_pairs
     fps = winnow_fingerprints(df, id_col, text_col, k, w, seed)
     return shared_hash_pairs(fps.select(id_col, "fp"), id_col, "fp",
                              min_shared, max_df, "n_shared_fps")

@@ -211,7 +211,7 @@ def test_chain_cluster_single_survivor(spark):
 
 
 def test_block_lsh_lossless_auto_blocks(spark):
-    """blocks=None scales the plan so the pigeonhole guarantee holds
+    """The multi-index plan scales so the pigeonhole guarantee holds
     for the requested hamming budget: a pair whose differing bits land
     in every 4-bit-era chunk must still be found, and the C(m, r)
     fan-out stays bounded (row replication per input = table count)."""
@@ -223,15 +223,13 @@ def test_block_lsh_lossless_auto_blocks(spark):
         assert len(widths) == k + r                    # pigeonhole form
         assert len(subs) == comb(k + r, r) <= 256      # bounded fan-out
     # construct a phash pair at hamming 6 spread over all 4 of the old
-    # 16-bit chunks — blocks=4 would miss it; the auto default finds it
+    # 16-bit chunks — a 4-block split would miss it; the plan finds it
     h1 = 0
     h2 = (1 | (1 << 10) | (1 << 20) | (1 << 30) |
           (1 << 45) | (1 << 60))
     pdf = pd.DataFrame({"image_id": ["a", "b"],
                         "phash": np.array([h1, h2], dtype=np.int64)})
     df = spark.createDataFrame(pdf)
-    missed = D.phash_near_dup(df, max_hamming=6, blocks=4).collect()
-    assert missed == []                      # the documented trade
     found = D.phash_near_dup(df, max_hamming=6).collect()
     assert [(r.id_a, r.id_b, r.hamming) for r in found] == [("a", "b", 6)]
 
@@ -320,35 +318,42 @@ def test_multi_index_plan_lossless_property():
 
 
 def test_phash_multi_index_lossless_at_hamming8(spark):
-    """Brute-force parity of the C(m, r) path: every pair within the
-    budget found, none beyond it, on adversarial bit spreads."""
-    rng = np.random.default_rng(17)
-    base = int(rng.integers(0, 2 ** 62))
-    rows = [("r0", base)]
-    # spread flips to defeat any single narrow block: 8 flips spaced
-    # across the whole word, plus controls at 9 flips (outside budget)
-    flip8 = base
-    for b in (0, 9, 18, 27, 36, 45, 54, 63):
-        flip8 ^= 1 << b
-    flip9 = flip8 ^ (1 << 31)
-    rows += [("r1", flip8), ("r2", flip9)]
-    for i in range(40):  # background noise rows
-        rows.append((f"n{i:02d}", int(rng.integers(0, 2 ** 62))))
-    pdf = pd.DataFrame(rows, columns=["image_id", "phash"])
-    pdf["phash"] = pdf["phash"].astype(np.int64)
-    df = spark.createDataFrame(pdf)
-    got = {(r.id_a, r.id_b, r.hamming)
-           for r in D.phash_near_dup(df, max_hamming=8).collect()}
-    # brute force oracle
-    import itertools
-    exp = set()
-    for (ia, ha), (ib, hb) in itertools.combinations(rows, 2):
-        d = bin((ha ^ hb) & (2 ** 64 - 1)).count("1")
-        if d <= 8:
-            a, b = sorted((ia, ib))
-            exp.add((a, b, d))
-    assert got == exp
-    assert ("r0", "r1", 8) in got
+    """Brute-force parity of the shared hamming join: every pair within
+    the budget found, none beyond it, on adversarial bit spreads — at
+    the 64-bit phash budget 8 (the C(m, r) multi-index, also through
+    ``phash_near_dup``) and at the 60-bit simhash budgets 3 (one block
+    per key) and 8 (multi-index)."""
+    for bits, k in ((64, 8), (60, 3), (60, 8)):
+        rng = np.random.default_rng(17)
+        mask = (1 << bits) - 1
+        base = int(rng.integers(0, 2 ** 62)) & mask
+        # spread k flips across the whole word to defeat any single
+        # narrow block, plus a control one flip outside the budget
+        flips = [round(i * (bits - 1) / (k - 1)) for i in range(k)]
+        near = base
+        for b in flips:
+            near ^= 1 << b
+        far = near ^ (1 << next(b for b in range(bits) if b not in flips))
+        rows = [("r0", base), ("r1", near), ("r2", far)]
+        rows += [(f"n{i:02d}", int(rng.integers(0, 2 ** 62)) & mask)
+                 for i in range(40)]              # background noise
+        pdf = pd.DataFrame(
+            [(i, h - (1 << 64) if h >> 63 else h) for i, h in rows],
+            columns=["image_id", "phash"]).astype({"phash": np.int64})
+        df = spark.createDataFrame(pdf)
+        got = {tuple(r) for r in D._hamming_pairs(
+            df, "image_id", "phash", bits, k).collect()}
+        # brute force oracle
+        exp = set()
+        for (ia, ha), (ib, hb) in itertools.combinations(rows, 2):
+            d = bin(ha ^ hb).count("1")
+            if d <= k:
+                exp.add((*sorted((ia, ib)), d))
+        assert got == exp, (bits, k)
+        assert ("r0", "r1", k) in got, (bits, k)
+        if bits == 64:
+            assert {tuple(r) for r in D.phash_near_dup(
+                df, max_hamming=k).collect()} == exp
 
 
 def test_clean_corpus_stages(spark):
@@ -708,6 +713,9 @@ def test_text_fold_cross_engine_on_awkward_text(spark):
         "simhash": (
             D.simhash(df, "text").select("doc_id", "simhash"),
             f"WITH {D.simhash_sql_cte()} SELECT doc_id, simhash FROM _sh"),
+        "token_count": (
+            X.token_count(df).select("doc_id", "n_tokens"),
+            f"SELECT doc_id, {X.token_count_sql('text')} FROM documents"),
         "fingerprint": (
             X.fingerprint(df).select("doc_id", "fp"),
             f"SELECT doc_id, {X.fingerprint_sql('text')} FROM documents"),
@@ -724,6 +732,29 @@ def test_text_fold_cross_engine_on_awkward_text(spark):
         if got != exp:
             diffs[name] = sorted(set(got) ^ set(exp), key=str)
     assert not diffs, diffs
+
+
+def test_whole_word_counts_cross_engine(spark):
+    """Stopword and language-marker counts are whole-word counts of the
+    ASCII-folded text, equal in both engines: 'éthe' holds the word
+    'the' (é is not a word char in either engine), 'the_end' holds
+    none ('_' is a word char)."""
+    rows = [(1, "éthe dog and the cat"), (2, "the_end"),
+            (3, "THE The the, A. is-it"), (4, None)]
+    df = spark.createDataFrame(rows, "doc_id INT, text STRING")
+    got = {r.doc_id: (r.stop_ratio, r.quality, r.lang_pred)
+           for r in X.language_id(X.quality_score(df)).collect()}
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows,
+                                           columns=["doc_id", "text"]))
+    q = X.quality_score_sql()
+    exp = {r[0]: r[1:] for r in con.sql(
+        f"SELECT doc_id, {q['stop_ratio']}, {q['quality']}, "
+        f"{X.language_id_sql()} FROM documents").fetchall()}
+    assert got == exp
+    assert got[1][0] == 0.6 and got[1][2] == "en"
+    assert got[2][0] == 0.0 and got[2][2] == "und"
+    assert got[3][0] == 1.2          # 6 stopwords over 5 space words
 
 
 def test_redact_pii_sequential_and_twin(spark):

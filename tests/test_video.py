@@ -217,7 +217,7 @@ def test_cluster_dedup_from_pairs_collapses_chains(spark):
     """A~B and B~C with NO direct A-C pair must still collapse to one
     survivor (the minimum id) — the component behavior pair-dropping
     alone cannot give; untouched items survive."""
-    from esri_dump_spark.operators.multimodal import (
+    from esri_dump_spark.operators.dedup import (
         cluster_dedup_from_pairs)
     items = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)],
                                   ["id"])
@@ -234,7 +234,7 @@ def test_cluster_dedup_from_pairs_matches_union_find(spark, seed):
     min id of every component plus every untouched item — the generic
     guarantee the modality wrappers inherit."""
     import numpy as np
-    from esri_dump_spark.operators.multimodal import (
+    from esri_dump_spark.operators.dedup import (
         cluster_dedup_from_pairs)
     rng = np.random.default_rng(seed)
     ids = [f"it{i:03d}" for i in range(30)]
