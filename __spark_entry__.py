@@ -86,6 +86,16 @@ def _poly_pdf(name: str, ring):
                          "rings_json": [json.dumps([ring])]})
 
 
+def _rect_diamond_pdf():
+    """The two-polygon set (rect id 0, diamond id 1) of pip_multi,
+    pip_anti and entry()."""
+    import json
+    import pandas as pd
+    return pd.DataFrame({
+        "poly_id": [0, 1], "name": ["rect", "diamond"],
+        "rings_json": [json.dumps([RECT_RING]), json.dumps([DIAMOND_RING])]})
+
+
 # ---------------------------------------------------------------- queries
 
 def q_count_probe(spark, sf_dir):
@@ -315,26 +325,16 @@ def q_pip_hole(spark, sf_dir):
 def q_pip_multi(spark, sf_dir):
     """J2 multi-polygon: one output row per (point, matching polygon) —
     points inside both polygons appear twice with distinct poly_ids."""
-    import json
-    import pandas as pd
     pts = _pip_points(spark, sf_dir)
-    polys = pd.DataFrame({
-        "poly_id": [0, 1], "name": ["rect", "diamond"],
-        "rings_json": [json.dumps([RECT_RING]), json.dumps([DIAMOND_RING])]})
-    out = point_in_polygon_join(pts, polys, res=8)
+    out = point_in_polygon_join(pts, _rect_diamond_pdf(), res=8)
     return out.select("c_custkey", "poly_id")
 
 
 def q_pip_anti(spark, sf_dir):
     """J5: anti-join — points inside neither polygon."""
-    import pandas as pd
-    import json
     pts = _pip_points(spark, sf_dir)
-    polys = pd.DataFrame({
-        "poly_id": [0, 1], "name": ["rect", "diamond"],
-        "rings_json": [json.dumps([RECT_RING]), json.dumps([DIAMOND_RING])]})
-    out = point_in_polygon_join(pts, polys, res=8, how="left_anti",
-                                id_col="c_custkey")
+    out = point_in_polygon_join(pts, _rect_diamond_pdf(), res=8,
+                                how="left_anti", id_col="c_custkey")
     return out.select("c_custkey")
 
 
@@ -1991,12 +1991,7 @@ def q_lineage_metrics(spark, sf_dir):
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: PIP spatial join + per-polygon rollup at sf0.001."""
     pts = _pip_points(spark, SF_DEFAULT)
-    import json
-    import pandas as pd
-    polys = pd.DataFrame({
-        "poly_id": [0, 1], "name": ["rect", "diamond"],
-        "rings_json": [json.dumps([RECT_RING]), json.dumps([DIAMOND_RING])]})
-    joined = point_in_polygon_join(pts, polys, res=8)
+    joined = point_in_polygon_join(pts, _rect_diamond_pdf(), res=8)
     return (joined.groupBy("poly_id", "poly_name")
             .agg(F.count(F.lit(1)).alias("n_points")))
 

@@ -23,11 +23,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..kernels import cells as C
-from .spatial_join import _COVER_SCHEMA, _cover, _parse_rings
+from .spatial_join import (DEFAULT_RES, _COVER_SCHEMA, _cover, _parse_rings,
+                           point_in_polygon_join)
 
 __all__ = ["tile_id_sql_expr", "assign_tiles", "tile_xy",
            "polygon_tile_index", "raster_vector_join", "parent_tile_sql",
-           "tile_pyramid_rollup"]
+           "tile_pyramid_rollup", "pip_tile_rollup", "ROLLUP_Z"]
+
+# zoom of the north-star rollup's tiles
+ROLLUP_Z = 13
 
 
 def tile_id_sql_expr(lon_col: str, lat_col: str, z: int) -> str:
@@ -45,6 +49,18 @@ def assign_tiles(df: DataFrame, z: int, lon_col: str = "lon",
                  lat_col: str = "lat", out: str = "tile_id") -> DataFrame:
     """JVM-side tile id assignment — stays in whole-stage codegen."""
     return df.withColumn(out, F.expr(tile_id_sql_expr(lon_col, lat_col, z)))
+
+
+def pip_tile_rollup(points: DataFrame, polygons, res: int = DEFAULT_RES,
+                    dim=None) -> DataFrame:
+    """The north-star job: points -> point-in-polygon join (cell
+    broadcast + exact ray-cast refine) -> z``ROLLUP_Z`` tile id ->
+    per-(polygon, tile) count, as (poly_id, tile_id, n). ``polygons``
+    and ``dim`` are as in ``point_in_polygon_join``."""
+    joined = point_in_polygon_join(points, polygons, res=res, dim=dim)
+    return (assign_tiles(joined, z=ROLLUP_Z)
+            .groupBy("poly_id", "tile_id")
+            .agg(F.count(F.lit(1)).alias("n")))
 
 
 def parent_tile_sql(tile_col: str, z_child: int) -> str:

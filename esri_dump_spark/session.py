@@ -13,14 +13,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark"]
+__all__ = ["get_spark", "default_cores"]
+
+
+def default_cores() -> int:
+    """Local-mode core count: ``SPARK_GRAFT_CPUS`` if set, else the
+    CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def get_spark(app_name: str = "esri-dump-spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = default_cores()
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     b = (

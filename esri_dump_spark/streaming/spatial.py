@@ -16,13 +16,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.spatial_join import point_in_polygon_join
+from ..operators.spatial_join import DEFAULT_RES, point_in_polygon_join
 
 __all__ = ["streaming_pip_counts"]
 
 
 def streaming_pip_counts(points_stream: DataFrame, polygons: pd.DataFrame,
-                         res: int = 8, window: str = "1 hour",
+                         res: int = DEFAULT_RES, window: str = "1 hour",
                          watermark: str = "2 hours",
                          ts_col: str = "ts") -> DataFrame:
     """points stream (… lon, lat, ts) -> per-(polygon, window) counts.

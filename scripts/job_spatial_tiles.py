@@ -9,8 +9,9 @@ Args: [images_parquet] [output_dir] [run_id] [polygons_parquet]
 
 With a 4th arg the polygons come from a parquet table
 (poly_id, rings_json[, name]); without it, from the small fixture
-polygon set. Either way ``point_in_polygon_join`` builds the cover
-dimension on the driver and broadcasts it.
+polygon set. Either way ``tiles.pip_tile_rollup`` runs the job, and its
+``point_in_polygon_join`` builds the cover dimension on the driver and
+broadcasts it.
 
 Resume model (Iceberg-manifest-like): the work unit is the input file
 (files stay unsplit below spark.sql.files.maxPartitionBytes, so a
@@ -33,8 +34,7 @@ import pyspark.sql.functions as F
 
 def run(spark: SparkSession, images_path: str, out_dir: str,
         run_id: str = "default", polygons_path: str | None = None) -> dict:
-    from esri_dump_spark.operators.spatial_join import point_in_polygon_join
-    from esri_dump_spark.operators.tiles import assign_tiles
+    from esri_dump_spark.operators.tiles import pip_tile_rollup
     from esri_dump_spark.operators.lineage import run_resumable
     from esri_dump_spark.sources.fixtures import polygons_pdf
 
@@ -45,9 +45,7 @@ def run(spark: SparkSession, images_path: str, out_dir: str,
     def transform(pending):
         polys = (polygons_pdf() if polygons_path is None
                  else spark.read.parquet(polygons_path))
-        joined = point_in_polygon_join(pending, polys, res=11)
-        return assign_tiles(joined, z=13).groupBy(
-            "poly_id", "tile_id").agg(F.count(F.lit(1)).alias("n"))
+        return pip_tile_rollup(pending, polys, res=11)
 
     # the crash-safety ordering (commit marker strictly after the sink
     # write; scan-side lineage) lives in run_resumable — shared with

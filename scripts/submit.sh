@@ -28,7 +28,7 @@ EOF
 )
 
 exec spark-submit \
-  --master "${SPARK_MASTER:-local[${SPARK_GRAFT_CPUS:-32}]}" \
+  --master "${SPARK_MASTER:-local[*]}" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.sql.adaptive.skewJoin.enabled=true \
   --conf spark.sql.execution.arrow.pyspark.enabled=true \

@@ -264,14 +264,13 @@ def test_extract_is_arrow_vectorized(spark, sf_dir):
 
 
 def test_north_star_job_shuffle_census(spark, sf_dir):
-    """The bench job's only wide exchange is the final rollup: the PIP
-    join is broadcast-shaped and the refine is a narrow filter, so the
-    32M-point scan reaches the aggregate without a data shuffle."""
+    """The north-star job's (``pip_tile_rollup``) only wide exchange is
+    the final rollup: the PIP join is broadcast-shaped and the refine is
+    a narrow filter, so the point scan reaches the aggregate without a
+    data shuffle."""
     import json
     import pandas as pd
-    import pyspark.sql.functions as F
-    from esri_dump_spark.operators.spatial_join import point_in_polygon_join
-    from esri_dump_spark.operators.tiles import assign_tiles
+    from esri_dump_spark.operators.tiles import pip_tile_rollup
     from esri_dump_spark.functions.geo_sql import derived_lonlat_sql
 
     lon, lat = derived_lonlat_sql("o_orderkey")
@@ -281,8 +280,8 @@ def test_north_star_job_shuffle_census(spark, sf_dir):
         "poly_id": [0], "rings_json": [json.dumps(
             [[[-30.0, -30.0], [-30.0, 30.0], [30.0, 30.0],
               [30.0, -30.0], [-30.0, -30.0]]])]})
-    out = (assign_tiles(point_in_polygon_join(pts, polys, res=6), z=9)
-           .groupBy("poly_id", "tile_id").agg(F.count(F.lit(1)).alias("n")))
+    out = pip_tile_rollup(pts, polys, res=6)
+    assert out.columns == ["poly_id", "tile_id", "n"]
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "SortMergeJoin" not in plan
