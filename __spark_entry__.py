@@ -2060,7 +2060,7 @@ REGISTRY = (
     Query(q_dedup_incremental,       True,  (3, 1, 0, 0, 0, 0, 3)),
     Query(q_extract_synthetic,       True,  (3, 0, 0, 0, 0, 1, 2)),
     Query(q_extract_bbox,            False, (3, 0, 0, 0, 0, 1, 2)),
-    Query(q_pip_fixture_polygons,    False, (2, 1, 0, 1, 0, 0, 1)),
+    Query(q_pip_fixture_polygons,    False, (2, 1, 0, 0, 0, 0, 1)),
     Query(q_verify_images,           False, (1, 0, 0, 0, 0, 1, 0)),
     Query(q_resize_images,           False, (1, 0, 0, 0, 0, 1, 0)),
     Query(q_phash_near_dup,          False, (4, 0, 0, 0, 0, 0, 0)),
@@ -2089,7 +2089,7 @@ REGISTRY = (
     Query(q_token_count,             True,  (0, 0, 0, 0, 0, 0, 0)),
     Query(q_ngram_jaccard_capped,    True,  (7, 4, 0, 0, 0, 0, 0)),
     Query(q_where_pushdown,          False, (0, 0, 0, 0, 0, 0, 0)),
-    Query(q_pip_rect,                True,  (1, 1, 0, 1, 0, 0, 1)),
+    Query(q_pip_rect,                True,  (1, 1, 0, 0, 0, 0, 1)),
     Query(q_image_decode_stats,      True,  (1, 0, 0, 0, 0, 1, 0)),
     Query(q_winnow_overlap,          False, (7, 3, 0, 0, 0, 0, 0)),
     Query(q_audio_near_dup,          True,  (9, 3, 0, 0, 0, 4, 0)),
@@ -2100,7 +2100,7 @@ REGISTRY = (
     Query(q_extract_ids,             False, (3, 0, 0, 0, 0, 1, 1)),
     Query(q_image_quality,           True,  (1, 0, 0, 0, 0, 1, 0)),
     Query(q_stylejson_doc,           False, (0, 0, 0, 0, 0, 0, 0)),
-    Query(q_pip_rect_dist,           False, (1, 1, 0, 1, 0, 0, 1)),
+    Query(q_pip_rect_dist,           False, (1, 1, 0, 0, 0, 0, 1)),
     Query(q_interval_attrib,         True,  (0, 1, 0, 0, 0, 0, 0)),
     Query(q_leakage_safe_split,      True,  (2, 0, 1, 0, 0, 0, 2)),
     Query(q_phash_cluster_dedup,     True,  (3, 0, 1, 0, 0, 0, 2)),
@@ -2123,9 +2123,9 @@ REGISTRY = (
     Query(q_join_broadcast,          True,  (1, 3, 0, 0, 0, 0, 0)),
     Query(q_class_breaks,            False, (1, 0, 0, 0, 0, 0, 0)),
     Query(q_extent_minmax,           False, (1, 0, 0, 0, 0, 0, 0)),
-    Query(q_pip_hole,                True,  (1, 1, 0, 1, 0, 0, 1)),
-    Query(q_pip_multi,               False, (0, 1, 0, 1, 0, 0, 0)),
-    Query(q_pip_anti,                False, (1, 2, 0, 1, 0, 0, 0)),
+    Query(q_pip_hole,                True,  (1, 1, 0, 0, 0, 0, 1)),
+    Query(q_pip_multi,               False, (0, 1, 0, 0, 0, 0, 0)),
+    Query(q_pip_anti,                False, (1, 2, 0, 0, 0, 0, 0)),
     Query(q_knn_geo_sparse,          False, (0, 0, 0, 0, 0, 0, 0)),
     Query(q_quality_score,           True,  (0, 0, 0, 0, 0, 0, 0)),
     Query(q_repetition,              True,  (0, 0, 0, 0, 0, 0, 0)),
@@ -2145,7 +2145,7 @@ REGISTRY = (
     Query(q_concat_key,              False, (1, 1, 0, 0, 0, 0, 0)),
     Query(q_union_distinct,          False, (1, 0, 0, 0, 0, 0, 0)),
     Query(q_match_expr,              False, (1, 0, 0, 0, 0, 0, 0)),
-    Query(q_pip_diamond,             True,  (1, 1, 0, 1, 0, 0, 1)),
+    Query(q_pip_diamond,             True,  (1, 1, 0, 0, 0, 0, 1)),
     Query(q_knn_geo_shuffle,         False, (0, 0, 0, 0, 0, 0, 0)),
     Query(q_sessionize_window,       True,  (1, 0, 0, 0, 0, 0, 1)),
     Query(q_events_hourly,           True,  (1, 0, 0, 0, 0, 0, 0)),

@@ -101,6 +101,32 @@ def run_headline(spark) -> dict[str, float]:
     return times
 
 
+def _archived() -> list[tuple[int, dict]]:
+    """(N, record) of every BENCH/rN.json by numeric N; an unreadable
+    record reads as {} but still holds its index."""
+    import glob
+    import re
+    out = []
+    for p in glob.glob(f"{REPO}/BENCH/r*.json"):
+        m = re.search(r"r(\d+)\.json$", p)
+        if m is None:
+            continue
+        try:
+            with open(p) as f:
+                out.append((int(m.group(1)), json.load(f)))
+        except (OSError, json.JSONDecodeError):
+            out.append((int(m.group(1)), {}))
+    return sorted(out, key=lambda nd: nd[0])
+
+
+def _history(sf, cpus) -> list[dict]:
+    """Archived records with per-query timings at this sf and core
+    count, oldest first: timings from another core count say nothing
+    about this host."""
+    return [d for _, d in _archived() if d.get("sf") == sf
+            and d.get("cpus") == cpus and d.get("queries")]
+
+
 def _noise_check(times: dict[str, float], sf) -> dict:
     """Compare this run's sentinel timings to their median across
     prior archived runs AT THE SAME SF AND CPUS (timings from another
@@ -109,17 +135,8 @@ def _noise_check(times: dict[str, float], sf) -> dict:
     (the shared host shows ~1.5-2x uniform swings of unchanged
     pure-JVM queries); the caller then re-times the suite once and
     records the faster pass, with both passes archived in the JSON."""
-    import glob
     import statistics
-    hist = []
-    for p in sorted(glob.glob(f"{REPO}/BENCH/r*.json")):
-        try:
-            with open(p) as f:
-                d = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if d.get("sf") == sf and d.get("cpus") == CPUS and d.get("queries"):
-            hist.append(d["queries"])
+    hist = [d["queries"] for d in _history(sf, CPUS)]
     sentinels = {}
     ratios = []
     for name in SENTINELS:
@@ -224,11 +241,11 @@ reported alongside.
 **Scaling efficiency (rows/sec@{hi} / rows/sec@{lo}) / {hi // lo} =
 {eff:.3f}** (target >= 0.8 per BASELINE.json north rule)
 
-The refine kernel is cache-blocked and allocation-free
-(esri_dump_spark/kernels/rings.py): the naive (m,n)-broadcast ray cast
-materializes ~67 MB of float64 temporaries per 64k-row Arrow batch and
-saturates DRAM, capping 4x-core speedup at ~1.6x; the blocked form
-keeps every temporary L2-resident and restores ~4x.
+The refine runs in the JVM, as one SQL filter in the broadcast join's
+condition (esri_dump_spark/operators/spatial_join.py): a point in an
+interior cover cell passes without a test, and a point in a boundary
+cell sums ray-cast crossings over that cell's own edges. No Python
+worker runs beside the task threads, so local[1] uses one core.
 
 Before this protocol was sized from the host (r39: 32-vCPU host, res 8,
 local[4] vs local[16]): local[4] 1,372,298 rows/s, local[16] 5,084,990
@@ -307,20 +324,15 @@ def main() -> None:
 
 def archive_run(out: dict) -> str:
     """Per-round bookkeeping so regressions are diffable: write
-    BENCH/r<N>.json (N = next free index), append a per-query delta
-    table vs the previous archive to BENCH/HISTORY.md, and return the
-    record's repo-relative path."""
-    import glob
-    import re
+    BENCH/r<N>.json (N = one past the highest archived index), append
+    a per-query delta table vs the last archive at the same sf and
+    cpus to BENCH/HISTORY.md, and return the record's repo-relative
+    path."""
     os.makedirs(f"{REPO}/BENCH", exist_ok=True)
-    runs = sorted(glob.glob(f"{REPO}/BENCH/r*.json"))
-    prev = None
-    n = 1
-    if runs:
-        last = runs[-1]
-        n = int(re.search(r"r(\d+)\.json$", last).group(1)) + 1
-        with open(last) as f:
-            prev = json.load(f)
+    runs = _archived()
+    n = runs[-1][0] + 1 if runs else 1
+    same = _history(out.get("sf"), out.get("cpus"))
+    prev = same[-1] if same else None
     record = f"BENCH/r{n:02d}.json"
     with open(f"{REPO}/{record}", "w") as f:
         json.dump(out, f, indent=1)

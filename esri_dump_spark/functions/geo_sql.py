@@ -7,11 +7,12 @@ operator has an independent, engine-external oracle:
   * ``derived_lonlat_sql``  — deterministic synthetic coordinates from
     an integer key (exact integer mod arithmetic, then one division:
     bit-identical across engines)
-  * ``raycast_sql``         — the reference's even-odd ray-cast
-    (/root/reference/lib/rings2geojson.ts:54-64) UNROLLED over a fixed
-    ring's edges as CASE WHEN terms; the same half-open inequalities,
-    so the SQL and the NumPy kernel agree on every point that doesn't
-    sit exactly on an edge (fixtures avoid edge-grid collisions)
+  * ``_crossing_sql``       — the reference's ray-cast crossing
+    (/root/reference/lib/rings2geojson.ts:54-64) for one edge, in the
+    IEEE operations of the NumPy kernel: the one spelling behind the
+    PIP join's refine filter, ``raycast_sql`` and the edge-table twins
+  * ``raycast_sql``         — the even-odd ray cast UNROLLED over a
+    fixed ring's edges as a sum of crossing terms
 """
 
 from __future__ import annotations
@@ -36,21 +37,19 @@ def derived_lonlat_sql(key: str, lon_mod: int = 36000, lat_mod: int = 18000,
 def raycast_sql(ring: list[list[float]], px: str, py: str) -> str:
     """Boolean SQL: point (px, py) inside ``ring`` by the reference's
     exact even-odd crossing rule. ``ring`` must be closed (first ==
-    last); edges are (j -> i) pairs like the reference loop."""
+    last); edges are (j -> i) pairs like the reference loop, one
+    ``_crossing_sql`` term each, with the vertices as DOUBLE literals;
+    horizontal edges never cross and are skipped."""
     assert ring[0] == ring[-1], "ring must be closed"
     terms = []
     n = len(ring) - 1  # unique vertices
     for i in range(n):
-        j = (i - 1) % n
-        xi, yi = ring[i]
-        xj, yj = ring[j]
+        (xj, yj), (xi, yi) = ring[(i - 1) % n], ring[i]
         if yi == yj:
             continue  # horizontal edge never satisfies the y-interval
-        cond_y = (f"(({yi} <= {py} AND {py} < {yj}) OR "
-                  f"({yj} <= {py} AND {py} < {yi}))")
-        cross = f"(({xj}) - ({xi})) * (({py}) - ({yi})) / (({yj}) - ({yi})) + ({xi})"
-        terms.append(f"CASE WHEN {cond_y} AND ({px}) < ({cross}) "
-                     f"THEN 1 ELSE 0 END")
+        terms.append(_crossing_sql(
+            *(f"CAST({float(v)!r} AS DOUBLE)" for v in (xj, yj, xi, yi)),
+            px, py))
     if not terms:
         return "FALSE"
     return "((" + " + ".join(terms) + ") % 2 = 1)"
@@ -101,16 +100,27 @@ def _segments_intersect_sql(a: str, b: str) -> str:
             f" AND {ub_t} / {u_b} >= 0 AND {ub_t} / {u_b} <= 1)")
 
 
-def _edge_crossing_case_sql(e: str, px: str, py: str) -> str:
-    """Ray-cast crossing CASE term for one edge row of alias ``e``
-    against probe point (px, py) — the reference's half-open rule with
-    the edge's head as base vertex (matching ``points_in_ring``)."""
-    return (f"CASE WHEN {e}.ty != {e}.hy"
-            f" AND ((({e}.hy <= {py}) AND ({py} < {e}.ty))"
-            f"  OR (({e}.ty <= {py}) AND ({py} < {e}.hy)))"
-            f" AND ({px}) < ({e}.tx - {e}.hx) * (({py}) - {e}.hy)"
-            f" / ({e}.ty - {e}.hy) + {e}.hx"
+def _crossing_sql(tx: str, ty: str, hx: str, hy: str, px: str,
+                  py: str) -> str:
+    """The one SQL spelling of a ray-cast crossing: 1 if the edge
+    tail (tx, ty) -> head (hx, hy) crosses the ray from probe point
+    (px, py), else 0. The reference's half-open rule with the head as
+    base vertex, in the IEEE operations and order of
+    ``points_in_ring``, so Spark, DuckDB and NumPy agree bit for bit.
+    Every argument is a SQL expression."""
+    return (f"CASE WHEN {ty} != {hy}"
+            f" AND ((({hy} <= {py}) AND ({py} < {ty}))"
+            f"  OR (({ty} <= {py}) AND ({py} < {hy})))"
+            f" AND ({px}) < ({tx} - {hx}) * (({py}) - {hy})"
+            f" / ({ty} - {hy}) + {hx}"
             f" THEN 1 ELSE 0 END")
+
+
+def _edge_crossing_case_sql(e: str, px: str, py: str) -> str:
+    """``_crossing_sql`` for the edge row or struct ``e`` (fields tx,
+    ty, hx, hy)."""
+    return _crossing_sql(f"{e}.tx", f"{e}.ty", f"{e}.hx", f"{e}.hy",
+                         px, py)
 
 
 def polygon_intersects_oracle_sql(recs_a: list[dict],

@@ -36,8 +36,8 @@ __all__ = [
     "MAX_RES", "LEVEL_SHIFT", "X_SHIFT", "Projection", "EQUIRECT",
     "MERCATOR", "grid_xy", "pack_xy", "clamp_sql", "grid_index_sql",
     "pack_sql", "grid_sql_expr", "latlng_to_cell", "cell_sql_expr",
-    "cell_to_res_xy", "square_bounds", "cell_bounds", "cell_center",
-    "grid_disk", "cover_bbox", "polygon_cover",
+    "cell_to_res_xy", "square_bounds", "square_reach", "cell_bounds",
+    "cell_center", "grid_disk", "cover_bbox", "polygon_cover",
 ]
 
 MAX_RES = 29
@@ -188,8 +188,10 @@ def polygon_cover(rings, level: int,
     polygon as given (testing projected vertices would be unsound
     under Mercator, where a lon/lat edge bows away from its chord).
     Squares holding a vertex are kept outright; the rest go through
-    ``rings.rects_intersect_polygon``. A superset is always fine: the
-    ray-cast refine is exact, pruning only shrinks the broadcast."""
+    ``rings.rects_intersect_polygon``; a border square reaches out to
+    the polygon's bbox, since points beyond the grid clamp into it. A
+    superset is always fine: the ray-cast refine is exact, pruning only
+    shrinks the broadcast."""
     rings = [close_ring(r) for r in rings]
     allpts = np.vstack(rings)
     v = np.column_stack(grid_xy(allpts[:, 0], allpts[:, 1], level,
@@ -201,5 +203,20 @@ def polygon_cover(rings, level: int,
     rest = np.flatnonzero(~keep)
     if rest.size:
         keep[rest] = rects_intersect_polygon(
-            rings, *square_bounds(level, xs[rest], ys[rest], projection))
+            rings, *square_reach(level, xs[rest], ys[rest], projection,
+                                 allpts.min(axis=0), allpts.max(axis=0)))
     return pack_xy(level, xs[keep], ys[keep])
+
+
+def square_reach(level: int, x, y, projection: Projection = EQUIRECT,
+                 lo=(-np.inf, -np.inf), hi=(np.inf, np.inf)):
+    """``square_bounds`` of squares (x, y), with the grid's border
+    squares stretched outward to ``lo`` (lon, lat) and ``hi``: the
+    encoders clamp every point beyond the grid into a border square."""
+    last = (1 << level) - 1
+    south = 0 if projection.lat_np(0.0) < projection.lat_np(1.0) else last
+    x0, y0, x1, y1 = square_bounds(level, x, y, projection)
+    return (np.where(x == 0, np.minimum(x0, lo[0]), x0),
+            np.where(y == south, np.minimum(y0, lo[1]), y0),
+            np.where(x == last, np.maximum(x1, hi[0]), x1),
+            np.where(y == last - south, np.maximum(y1, hi[1]), y1))

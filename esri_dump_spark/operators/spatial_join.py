@@ -1,32 +1,40 @@
 """Point-in-polygon spatial join (J2) — broadcast cell join + exact
-ray-cast refine.
+ray-cast refine, all in the JVM.
 
 Physical plan (SURVEY.md §2.5, §4):
 
   polygons (small)  --driver--> rings parsed once into closed float64
-                                arrays, feeding both the cover
-                                (kernels.cells) and the refine
-                                -> tiny (cell, poly_id[, poly_name])
+                                arrays, covered (kernels.cells) and
+                                labelled per cover cell:
+                                -> tiny (cell, poly_id[, poly_name],
+                                         interior, edges)
   points (huge)     --JVM-----> cell id attached via a pure SQL
                                 expression (whole-stage codegen)
   coarse:           points JOIN broadcast(cells) ON cell  (the one
                     broadcast; no shuffle of the big side)
-  refine:           Arrow-batched pandas UDF: one stable sort of the
-                    batch by poly_id, then the exact reference ray
-                    cast (even-odd, half-open edge rule) once per
-                    polygon run (``pip_refine``)
+  refine:           one SQL filter, pushed into the join condition:
+                      interior OR aggregate(edges, 0, (acc, e) ->
+                                  acc + <crossing>) % 2 = 1
+
+A cover cell is *interior* when no ring edge (shell or hole) touches
+its rectangle padded by ``_PAD`` degrees and its centre is inside:
+every point that maps to the cell is then inside by the reference
+rule, and ``OR`` short-circuits before the edge sum. Any other cell
+is a *boundary* cell and carries only the non-horizontal edges that
+can add a crossing for a point in it (y-span meets the padded cell
+rows, max x at or right of the padded x0). A cell with no touching
+edge and its centre outside holds no inside point and leaves the
+cover. ``<crossing>`` is ``geo_sql._crossing_sql``: the IEEE
+operations of ``kernels.rings.points_in_ring`` in the same order, so
+the join is bit-identical to ``points_in_polygon``.
 
 There is one point-in-polygon path: a Spark DataFrame of polygons is
 collected to the driver once and covered there like a pandas one
 (3,000 parcels at res 11 in about 0.3 s on a 4-vCPU host).
 
 At 10^12 rows the coarse phase is the only data movement and it is
-broadcast-shaped; the refine is embarrassingly parallel. Hot cells
-don't hurt a broadcast join, but per-cell aggregations do (skew.py).
-
-The refine predicate is exactly the reference's
-``coordinatesContainPoint`` (lib/rings2geojson.ts:54-64) extended to
-multi-ring even-odd, vectorized over the Arrow batch.
+broadcast-shaped; the refine is a per-row filter. Hot cells don't
+hurt a broadcast join, but per-cell aggregations do (skew.py).
 """
 
 from __future__ import annotations
@@ -41,10 +49,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..functions.geo_sql import _edge_crossing_case_sql
 from ..kernels import cells as C
 from ..kernels.rings import close_ring, points_in_polygon, polygons_intersect
 
-__all__ = ["attach_cell", "build_polygon_dim", "pip_refine",
+__all__ = ["attach_cell", "build_polygon_dim",
            "point_in_polygon_join", "polygon_cover_df",
            "point_in_polygon_join_dist",
            "polygon_intersects_join", "DEFAULT_RES"]
@@ -52,6 +61,13 @@ __all__ = ["attach_cell", "build_polygon_dim", "pip_refine",
 DEFAULT_RES = 12
 
 _COVER_SCHEMA = "cell long, poly_id long"
+_LABEL_SCHEMA = ("interior boolean, "
+                 "edges array<struct<tx double, ty double, hx double, "
+                 "hy double>>")
+# degrees a cell is padded by before the edge test: far above the
+# float error of the cell mapping and of the ray cast (~1e-13 degrees)
+_PAD = 1e-9
+_BLOCK = 1 << 18    # cell x edge pairs per label block
 
 
 def attach_cell(df: DataFrame, lon_col: str = "lon", lat_col: str = "lat",
@@ -66,6 +82,14 @@ def _parse_rings(rings_json: str) -> list[np.ndarray]:
             for r in json.loads(rings_json)]
 
 
+def _cover_rows(cells: list, keys: pd.DataFrame) -> pd.DataFrame:
+    """(cell, *keys) rows: polygon i's ``cells`` with its ``keys`` row."""
+    rows = np.repeat(np.arange(len(keys)), [c.size for c in cells])
+    out = keys.iloc[rows].reset_index(drop=True)
+    out.insert(0, "cell", np.concatenate(cells or [np.array([], np.int64)]))
+    return out
+
+
 def _cover(rings, keys: pd.DataFrame, level: int,
            projection: C.Projection = C.EQUIRECT) -> pd.DataFrame:
     """(cell, *keys) rows: every grid square covering a polygon, with
@@ -73,41 +97,100 @@ def _cover(rings, keys: pd.DataFrame, level: int,
     the polygons' ``_parse_rings`` arrays in ``keys`` order. The one
     cover loop, for cells and (``tiles.polygon_tile_index``) tiles.
     Pass the schema explicitly: inference fails on 0 rows."""
-    cells = [C.polygon_cover(r, level, projection) for r in rings]
-    rows = np.repeat(np.arange(len(keys)), [c.size for c in cells])
-    out = keys.iloc[rows].reset_index(drop=True)
-    out.insert(0, "cell", np.concatenate(cells or [np.array([], np.int64)]))
-    return out
+    return _cover_rows([C.polygon_cover(r, level, projection)
+                        for r in rings], keys)
+
+
+def _segments_meet_rects(seg, x0, y0, x1, y1) -> np.ndarray:
+    """bool[m]: segment m (rows tx, ty, hx, hy of ``seg``) meets the
+    closed rectangle m, given its bounding box overlaps it. Exact up to
+    rounding far below ``_PAD``: the rectangle's corners are not all
+    strictly on one side of the segment's line."""
+    tx, ty, hx, hy = seg
+    dx, dy = hx - tx, hy - ty
+    sides = np.stack([dx * (cy - ty) - dy * (cx - tx)
+                      for cx, cy in ((x0, y0), (x0, y1), (x1, y0), (x1, y1))])
+    return (sides.min(axis=0) <= 0) & (sides.max(axis=0) >= 0)
+
+
+def _label(rings: list[np.ndarray], cells: np.ndarray):
+    """(cells, interior, edges) of one polygon's cover, labelled for the
+    SQL refine. Interior: no ring segment meets the cell padded by
+    ``_PAD`` and the centre is inside. Boundary: the edge list holds
+    the non-horizontal (tx, ty, hx, hy) edges whose y-span meets the
+    padded cell rows and whose max x is at least the padded x0. Cells
+    on the grid border are boundary cells open to infinity outward
+    (``cells.square_reach``). Untouched cells with the centre outside
+    are dropped."""
+    res, x, y = C.cell_to_res_xy(cells)
+    x0, y0, x1, y1 = C.square_bounds(res, x, y)
+    x0, y0, x1, y1 = x0 - _PAD, y0 - _PAD, x1 + _PAD, y1 + _PAD
+    reach = C.square_reach(int(res[0]), x, y)
+    seg = np.vstack([np.column_stack([r[:-1], r[1:]])
+                     for r in rings if len(r) > 1]
+                    or [np.empty((0, 4))]).T
+    touched = np.isinf(reach).any(axis=0)
+    lox, hix = np.minimum(seg[0], seg[2]), np.maximum(seg[0], seg[2])
+    lo, hi = np.minimum(seg[1], seg[3]), np.maximum(seg[1], seg[3])
+    step = max(1, _BLOCK // max(seg.shape[1], 1))
+    for s in range(0, cells.size, step):
+        b = slice(s, s + step)
+        c, e = np.nonzero((lox <= x1[b, None]) & (hix >= x0[b, None])
+                          & (lo <= y1[b, None]) & (hi >= y0[b, None]))
+        c += s
+        touched[c[_segments_meet_rects(seg[:, e], x0[c], y0[c], x1[c],
+                                       y1[c])]] = True
+    centre = np.column_stack([(x0 + x1) / 2, (y0 + y1) / 2])
+    inside = np.zeros(cells.size, dtype=bool)
+    inside[~touched] = points_in_polygon(centre[~touched], rings)
+    keep = touched | inside
+
+    bnd = np.flatnonzero(touched)
+    bx0, by0, _, by1 = (v[bnd, None] + d for v, d in
+                        zip(reach, (-_PAD, -_PAD, _PAD, _PAD)))
+    slanted = seg[1] != seg[3]
+    quads = seg[:, slanted].T
+    lo, hi, right = lo[slanted], hi[slanted], hix[slanted]
+    counts = np.zeros(cells.size, dtype=np.int64)
+    edges = []
+    for s in range(0, bnd.size, step):
+        b = slice(s, s + step)
+        rows, cols = np.nonzero((lo <= by1[b]) & (hi >= by0[b])
+                                & (right >= bx0[b]))
+        counts[bnd[b]] = np.bincount(rows, minlength=len(bx0[b]))
+        edges += map(tuple, quads[cols].tolist())
+    ends = np.cumsum(counts[keep])
+    return (cells[keep], inside[keep],
+            [edges[i:j] for i, j in zip(np.r_[0, ends[:-1]], ends)])
 
 
 def build_polygon_dim(polygons: pd.DataFrame, res: int = DEFAULT_RES):
     """The static polygon dimension, built once per polygon set: (cover
-    pdf of (cell, poly_id[, poly_name]), {poly_id: closed float64 ring
-    arrays}). Each ``rings_json`` is parsed once, for both the cover
-    and the refine. ``poly_id`` must be unique."""
+    pdf of (cell, poly_id[, poly_name], interior, edges), {poly_id:
+    closed float64 ring arrays}). Each ``rings_json`` is parsed once;
+    every cover row is labelled for the SQL refine (``_label``).
+    ``poly_id`` must be unique."""
     pids = polygons["poly_id"]
     dup = sorted(set(pids[pids.duplicated()].tolist()))
     if dup:
         raise ValueError(f"duplicate poly_id in polygon set: {dup}")
     rings = [_parse_rings(rj) for rj in polygons["rings_json"]]
     keys = polygons[[c for c in ("poly_id", "name") if c in polygons]]
-    cover = _cover(rings, keys.rename(columns={"name": "poly_name"}), res)
+    labelled = [_label(r, C.polygon_cover(r, res)) for r in rings]
+    cover = _cover_rows([c for c, _, _ in labelled],
+                        keys.rename(columns={"name": "poly_name"}))
+    cover["interior"] = np.concatenate([i for _, i, _ in labelled]
+                                       or [np.array([], bool)])
+    cover["edges"] = [e for _, _, es in labelled for e in es]
     return cover, dict(zip(map(int, pids), rings))
 
 
-def pip_refine(lon: np.ndarray, lat: np.ndarray, poly_id: np.ndarray,
-               rings_by_pid: dict) -> np.ndarray:
-    """bool[m]: is candidate i inside ``rings_by_pid[poly_id[i]]``. One
-    stable sort groups the batch by polygon, ``points_in_polygon`` runs
-    once per run and scatters back: bit-identical to masking the batch
-    once per polygon, without the per-polygon scans."""
-    pts = np.column_stack([lon, lat]).astype(np.float64, copy=False)
-    out = np.zeros(len(pts), dtype=bool)
-    order = np.argsort(poly_id, kind="stable")
-    pids, starts = np.unique(poly_id[order], return_index=True)
-    for pid, idx in zip(pids, np.split(order, starts[1:])):
-        out[idx] = points_in_polygon(pts[idx], rings_by_pid[int(pid)])
-    return out
+def _refine_sql(lon_col: str, lat_col: str) -> str:
+    """The refine as one SQL predicate over a joined cover row."""
+    crossing = _edge_crossing_case_sql("e", f"CAST(`{lon_col}` AS DOUBLE)",
+                                       f"CAST(`{lat_col}` AS DOUBLE)")
+    return (f"interior OR aggregate(edges, 0, (acc, e) -> acc + {crossing})"
+            " % 2 = 1")
 
 
 def polygon_cover_df(polygons: DataFrame,
@@ -222,23 +305,17 @@ def point_in_polygon_join(points: DataFrame, polygons,
                     if c in polygons.columns]
             polygons = polygons.select(*cols).toPandas()
         dim = build_polygon_dim(polygons, res)
-    cover_pdf, rings_by_pid = dim
-    schema = _COVER_SCHEMA + (", poly_name string"
-                              if "poly_name" in cover_pdf else "")
+    cover_pdf = dim[0]
+    schema = ", ".join([_COVER_SCHEMA] + (["poly_name string"]
+                                          if "poly_name" in cover_pdf
+                                          else []) + [_LABEL_SCHEMA])
     cell_index = points.sparkSession.createDataFrame(cover_pdf, schema)
-
-    @pandas_udf("boolean")
-    def refine(lon: pd.Series, lat: pd.Series,
-               poly_id: pd.Series) -> pd.Series:
-        return pd.Series(pip_refine(lon.to_numpy(), lat.to_numpy(),
-                                    poly_id.to_numpy(), rings_by_pid))
-
     pts = attach_cell(points, lon_col, lat_col, res)
     matched = (pts.join(F.broadcast(cell_index), "cell", "inner")
-               .filter(refine(F.col(lon_col), F.col(lat_col),
-                              F.col("poly_id"))))
+               .filter(_refine_sql(lon_col, lat_col))
+               .drop("cell", "interior", "edges"))
     if how == "inner":
-        return matched.drop("cell")
+        return matched
     key = id_col if id_col is not None else points.columns[0]
     if key not in points.columns:
         raise ValueError(f"id_col {key!r} not in points columns")

@@ -66,11 +66,15 @@ def _sample(rings, level, seed, n=600):
 @settings(max_examples=120, deadline=None)
 @given(_polygon_case())
 @example(([np.array([[0.0, 50.0], [10.0, 70.0], [0.0, 70.0]])], 10, 0))
+@example(([np.array([[-180.0, -90.00000000000001], [-135.0, -90.00000000000001],
+                     [-135.0, -95.625], [-180.0, -95.625]])], 4, 0))
 def test_polygon_cover_sound_in_both_projections(case):
     """Every point the exact ray cast puts inside the polygon encodes
     (NumPy) to a square of the polygon's cover, for cells and tiles.
-    The explicit example's long edge bows about 9 tiles outward in
-    Mercator space at z10."""
+    The first explicit example's long edge bows about 9 tiles outward
+    in Mercator space at z10; the second lies beyond the grid, where
+    the encoders clamp its points into border squares that hold none
+    of its vertices."""
     rings, level, seed = case
     closed = [close_ring(r) for r in rings]
     pts = _sample(rings, level, seed)

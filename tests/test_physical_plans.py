@@ -1,8 +1,8 @@
 """Physical-plan shape assertions — the scale contract, not just row
 correctness: every registered query's plan matches its registry
 fingerprint, filters reach the parquet scan, small dims broadcast,
-aggregates have map-side partials, and the refine UDF is
-Arrow-vectorized (never row-at-a-time BatchEvalPython).
+aggregates have map-side partials, and the PIP refine is a SQL filter
+in the join condition (no Python evaluation node at all).
 """
 
 from __future__ import annotations
@@ -130,12 +130,12 @@ def test_bm25_plan_shape(spark, sf_dir):
     assert "TakeOrderedAndProject" in ph
 
 
-def test_pip_join_is_broadcast_plus_arrow(spark, sf_dir):
+def test_pip_join_is_broadcast_plus_sql_filter(spark, sf_dir):
     df = E.queries()["pip_rect"](spark, sf_dir)
     plan = _physical(df)
     assert "BroadcastHashJoin" in plan          # coarse cell equi-join
-    assert "ArrowEvalPython" in plan            # vectorized refine
-    assert "BatchEvalPython" not in plan        # never row-at-a-time
+    assert "aggregate(" in plan                 # edge-list refine in SQL
+    assert "EvalPython" not in plan             # no Python worker at all
     assert "SortMergeJoin" not in plan
 
 

@@ -1,19 +1,22 @@
 """Property tests (hypothesis): the cache-blocked ray cast must equal
 a literal transcription of the reference predicate on arbitrary rings
-and points, and ring assembly invariants must hold for arbitrary ring
-soups.
+and points, ring assembly invariants must hold for arbitrary ring
+soups, and the PIP join's SQL refine must equal the kernel.
 """
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
-from hypothesis import given, settings, strategies as st
+import pandas as pd
+from hypothesis import example, given, settings, strategies as st
 
 from esri_dump_spark.kernels.rings import (close_ring, points_in_polygon,
                                            points_in_ring,
                                            ring_is_clockwise,
                                            rings_to_geojson)
-from esri_dump_spark.operators.spatial_join import pip_refine
+from esri_dump_spark.operators.spatial_join import point_in_polygon_join
 
 coord = st.floats(min_value=-180.0, max_value=180.0,
                   allow_nan=False, allow_infinity=False, width=64)
@@ -124,59 +127,101 @@ def test_polygons_intersect_matches_rect_oracle(rects_a, rects_b):
     assert polygons_intersect(rings_a, rings_b) == expected
 
 
-# ---- sorted PIP refine vs the per-polygon masked path -----------------
+# ---- SQL refine over labelled cover rows vs points_in_polygon -----------
 
-def _masked_refine(pts, poly_id, rings_by_pid):
-    """The path ``pip_refine`` replaces: mask the batch once per
-    polygon and call ``points_in_polygon`` on the masked rows."""
-    out = np.zeros(len(poly_id), dtype=bool)
-    for pid in np.unique(poly_id):
-        mask = poly_id == pid
-        out[mask] = points_in_polygon(pts[mask], rings_by_pid[int(pid)])
+# cells of 22.5 x 11.25 degrees: coordinates on the half-cell grid put
+# vertices, edges and points on cell edges and centres; k = -1 and 33
+# lie beyond the grid, where the cell expression clamps
+_RES = 4
+# whole ulps (int) or degrees (float): nudges inside and just past the
+# 1e-9 degree cell padding
+_NUDGES = (0, 1, 2, -1, -2, 1e-9, -1e-9, 3e-9, -3e-9)
+
+
+def _nudge(v: float, d) -> float:
+    if isinstance(d, float):
+        return v + d
+    for _ in range(abs(d)):
+        v = np.nextafter(v, np.inf if d > 0 else -np.inf)
+    return float(v)
+
+
+def _axis(span: float):
+    return st.builds(lambda k, d: _nudge(k * span / 32 - span / 2, d),
+                     st.integers(-1, 33), st.sampled_from(_NUDGES))
+
+
+lonlat = st.tuples(_axis(360.0), _axis(180.0))
+rect_ring = st.builds(lambda a, b: [a, (b[0], a[1]), b, (a[0], b[1])],
+                      lonlat, lonlat)             # two horizontal edges
+free_ring = st.lists(lonlat, min_size=3, max_size=8)
+# a second or third ring is a hole or another part (even-odd)
+polygon = st.lists(st.one_of(rect_ring, free_ring), min_size=1, max_size=3)
+
+
+def _sql_pairs(spark, pts: np.ndarray, polys: dict, res: int) -> set:
+    """{(point index, poly_id)} from ``point_in_polygon_join``: the
+    broadcast cover of ``build_polygon_dim`` rows and its SQL refine."""
+    pdf = pd.DataFrame({"pid": np.arange(len(pts), dtype=np.int64),
+                        "lon": pts[:, 0], "lat": pts[:, 1]})
+    points = spark.createDataFrame(pdf, "pid long, lon double, lat double")
+    polygons = pd.DataFrame({"poly_id": list(polys), "rings_json": [
+        json.dumps([[list(map(float, v)) for v in r] for r in rings])
+        for rings in polys.values()]})
+    return {(r.pid, r.poly_id) for r in
+            point_in_polygon_join(points, polygons, res=res).collect()}
+
+
+def _masked_pairs(pts: np.ndarray, polys: dict) -> set:
+    """The same pairs by ``points_in_polygon``, one call per polygon."""
+    out = set()
+    for pid, rings in polys.items():
+        hit = points_in_polygon(pts, [close_ring(np.array(r, np.float64))
+                                      for r in rings])
+        out |= {(int(i), pid) for i in np.flatnonzero(hit)}
     return out
 
 
-# integer vertices make horizontal edges common; points on the integer
-# and half-integer grid land on vertices and on edges
-grid_ring = st.lists(st.tuples(st.integers(0, 8), st.integers(0, 8)),
-                     min_size=3, max_size=9)
-grid_polygon = st.lists(grid_ring, min_size=1, max_size=3)  # holes too
+_ULP = float(np.spacing(22.5))
 
 
-@given(st.dictionaries(st.integers(-2**40, 2**40), grid_polygon,
-                       min_size=1, max_size=5),
-       st.data())
-@settings(max_examples=150, deadline=None)
-def test_pip_refine_matches_masked_path(polygons, data):
-    rings_by_pid = {pid: [close_ring(np.array(r, dtype=np.float64))
-                          for r in rings]
-                    for pid, rings in polygons.items()}
-    # shuffled, interleaved ids; short lists give single-row runs and
-    # the empty batch
-    ids = data.draw(st.lists(st.sampled_from(sorted(polygons)),
-                             max_size=60))
-    half = st.integers(0, 16).map(lambda v: v / 2)
-    pts = np.array(data.draw(st.lists(st.tuples(half, half),
-                                      min_size=len(ids),
-                                      max_size=len(ids))),
-                   dtype=np.float64).reshape(-1, 2)
-    poly_id = np.array(ids, dtype=np.int64)
-    got = pip_refine(pts[:, 0], pts[:, 1], poly_id, rings_by_pid)
-    exp = _masked_refine(pts, poly_id, rings_by_pid)
-    assert got.dtype == bool and np.array_equal(got, exp)
+@given(st.dictionaries(st.integers(-2**40, 2**40), polygon,
+                       min_size=1, max_size=3),
+       st.lists(lonlat, max_size=30),
+       st.lists(st.tuples(st.integers(0, 10**6), st.sampled_from(_NUDGES),
+                          st.sampled_from(_NUDGES),
+                          st.none() | _axis(180.0)), max_size=30))
+@example({0: [[(22.5 - _ULP, -45.0), (112.5, -45.0), (112.5, 45.0),
+               (22.5 - _ULP, 45.0)]]}, [], [(0, -1, 0, 5.625)])
+@settings(max_examples=80, deadline=None)
+def test_pip_refine_matches_masked_path(spark, polys, free, picks):
+    """The join's SQL refine over interior / edge-list cover rows equals
+    ``points_in_polygon`` bit for bit, for points on vertices, on
+    (horizontal) edge midpoints, on padded cell edges and beyond the
+    grid. A pick (i, dx, dy, lat) nudges vertex i, or puts its nudged
+    lon at ``lat``: the example is a point one ulp left of an edge
+    that sits one ulp left of a cell edge, which the cell expression
+    maps into the cell right of both."""
+    verts = [v for rings in polys.values() for r in rings for v in r]
+    near = [(_nudge(verts[i % len(verts)][0], dx),
+             _nudge(verts[i % len(verts)][1], dy) if lat is None else lat)
+            for i, dx, dy, lat in picks]
+    mids = [((a[0] + b[0]) / 2, (a[1] + b[1]) / 2)
+            for rings in polys.values() for r in rings
+            for a, b in zip(r, r[1:] + r[:1])]
+    pts = np.array(free + near + mids, dtype=np.float64).reshape(-1, 2)
+    assert _sql_pairs(spark, pts, polys, _RES) == _masked_pairs(pts, polys)
 
 
-def test_pip_refine_empty_and_blocked_batches():
-    """The empty batch, and runs long enough for the kernel's
-    cache-blocked evaluation, match the masked path."""
-    ring = close_ring(np.array([[0, 0], [0, 4], [4, 4], [4, 0]], float))
-    hole = close_ring(np.array([[1, 1], [3, 1], [3, 3], [1, 3]], float))
-    rings_by_pid = {7: [ring, hole], -3: [ring]}
-    empty = np.array([], dtype=np.float64)
-    assert pip_refine(empty, empty, np.array([], np.int64),
-                      rings_by_pid).shape == (0,)
+def test_pip_refine_empty_and_blocked_batches(spark):
+    """An empty point set, and a candidate set long enough for the
+    masked path's cache-blocked kernel, match points_in_polygon."""
+    ring = [[0, 0], [0, 4], [4, 4], [4, 0]]
+    hole = [[1, 1], [3, 1], [3, 3], [1, 3]]
+    polys = {7: [ring, hole], -3: [ring]}
+    empty = np.empty((0, 2), dtype=np.float64)
+    assert _sql_pairs(spark, empty, polys, 8) == set()
     rng = np.random.default_rng(0)
     pts = rng.integers(-1, 10, size=(140_000, 2)) / 2
-    poly_id = rng.choice([7, -3], size=len(pts))
-    got = pip_refine(pts[:, 0], pts[:, 1], poly_id, rings_by_pid)
-    assert np.array_equal(got, _masked_refine(pts, poly_id, rings_by_pid))
+    got = _sql_pairs(spark, pts, polys, 8)
+    assert got == _masked_pairs(pts, polys) and len(got) > 50_000

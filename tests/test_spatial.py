@@ -93,6 +93,38 @@ def test_pip_join_matches_brute_force(spark, points_pdf):
             assert got == exp, (kind, res)
 
 
+def _star_polygon_pdf(nv: int = 4096) -> pd.DataFrame:
+    """One clockwise ``nv``-vertex star (radii 1.0 and 0.9 degrees)
+    with a 64-vertex hole: thin spikes put hundreds of edges in one
+    cell row."""
+    cx, cy = -92.5, 24.5
+    th = -np.linspace(0.0, 2.0 * np.pi, nv, endpoint=False)
+    r = np.where(np.arange(nv) % 2 == 0, 1.0, 0.9)
+    shell = np.column_stack([cx + r * np.cos(th), cy + r * np.sin(th)])
+    ht = np.linspace(0.0, 2.0 * np.pi, 64, endpoint=False)
+    hole = np.column_stack([cx + 0.3 * np.cos(ht), cy + 0.3 * np.sin(ht)])
+    return pd.DataFrame({"poly_id": [1], "rings_json": [
+        json.dumps([shell.tolist(), hole.tolist()])]})
+
+
+@pytest.mark.parametrize("res", [8, 12])
+def test_pip_join_high_vertex_star(spark, res):
+    """A 4,096-vertex star with a hole: long boundary edge lists keep
+    every edge, so the join equals NumPy brute force."""
+    polys = _star_polygon_pdf()
+    verts = np.vstack([np.asarray(r) for r in
+                       json.loads(polys["rings_json"][0])])
+    rng = np.random.default_rng(res)
+    pts = np.vstack([rng.uniform(verts.min(0), verts.max(0), (8_000, 2)),
+                     verts, (verts[:-1] + verts[1:]) / 2])
+    pdf = pd.DataFrame({"image_id": np.arange(len(pts)),
+                        "lon": pts[:, 0], "lat": pts[:, 1]})
+    exp = _brute_force_pip(pdf, polys)
+    got = {(r.image_id, r.poly_id) for r in point_in_polygon_join(
+        spark.createDataFrame(pdf), polys, res=res).collect()}
+    assert got == exp and len(exp) > 2_000
+
+
 def test_pip_join_dist_matches_driver_path(spark, points_pdf):
     """A partitioned Spark DataFrame of >= 10k polygons (cover built
     executor-side) must give exactly the result of the same polygons
